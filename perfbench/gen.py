@@ -32,18 +32,25 @@ _JUNK = ["advertisement", "cookie notice ok", "share this page"]
 _BASE_TS = datetime.datetime(2025, 3, 1, tzinfo=datetime.timezone.utc)
 MIMETYPE_PAGE = "application/vnd.prima.page+xml"
 
-# extract batch shape: per batch exactly this many of each kind
-GIANTS_PER_BATCH = 1          # > 20,000 chars: salted path
-GIANT_CHARS = 21_000          # the pipeline routes >= 20,000 chars as giant
-PARAGRAPH_PAGES_PER_BATCH = 2  # GT-per-region pages: one ~1,000-char line
+# extract mix.  Page length (10-100 words, about uniform: the deciles are
+# 19, 28, ..., 90 words) and the noise model follow the sf0.1 documents
+# table and sources/pages.py, which bench.py's extract job is built from;
+# the giant share is the 3 in 3,000 of BENCH_SKEW.md.  The paragraph-page
+# and re-crawl shares have no source in the repository (see README.md).
+GIANT_SHARE = 0.001
+GIANT_CHARS = 21_000          # just over the pipeline's giant_chars (20,000)
+PARAGRAPH_SHARE = 0.002       # GT-per-region pages: one ~1,000-char line
 PARAGRAPH_CHARS = 1000
 RECRAWL_SHARE = 0.05          # share of the previous batch's urls re-sent
 
-# curate batch shape (shares of the batch)
-EXACT_DUP_SHARE = 0.04
-NEAR_DUP_SHARE = 0.04
-LOW_QUALITY_SHARE = 0.04
-BOILERPLATE_SHARE = 0.04
+# curate mix: the verdict shares of the sf0.1 documents table (5,000 docs;
+# curation_verdict_df at local[4]): 0.16% exact duplicates, 4.88% near
+# duplicates (exact ones included), 61.9% failing the Gopher gate, 9.2%
+# dropped for duplicated spans.  The cross-batch plants have no source.
+EXACT_DUP_SHARE = 0.0016
+NEAR_DUP_SHARE = 0.0472
+LOW_QUALITY_SHARE = 0.619
+BOILERPLATE_SHARE = 0.092
 RECRAWL_DOCS_SHARE = 0.02     # exact copies of the previous batch's anchors
 CROSS_NEAR_SHARE = 0.01       # near copies of the previous batch's anchors
 
@@ -218,21 +225,27 @@ class Generator:
             segs = [_noise(s, rng) for s in _lines(para.split(), rng)]
             return [para] + lines, segs + _segments(lines, rng)
         words = (self._text(rng, GIANT_CHARS).split() if kind == "giant"
-                 else self.words.words(rng, rng.randint(40, 70)))
+                 else self.words.words(rng, rng.randint(10, 100)))
         lines = _lines(words, rng)
         if rng.random() < 0.3:
             lines.insert(rng.randrange(len(lines) + 1),
                          rng.choice(["ok", "§ 7", "Id.", "42"]))
         return lines, _segments(lines, rng)
 
+    def special_pages(self, batch: int) -> tuple[int, int]:
+        """(giants, paragraph pages) of one batch: their shares of its
+        size, and at least one of each, so the warm-up runs both paths."""
+        n = self.size_of(batch)
+        return (max(1, round(GIANT_SHARE * n)), max(1, round(PARAGRAPH_SHARE * n)))
+
     def page_kind(self, batch: int, k: int) -> str:
         """Giants and paragraph pages sit at fixed, evenly spread slots."""
-        n_special = GIANTS_PER_BATCH + PARAGRAPH_PAGES_PER_BATCH
-        step = self.size_of(batch) // (n_special + 1)
+        giants, paragraphs = self.special_pages(batch)
+        step = self.size_of(batch) // (giants + paragraphs + 1)
         g = k // step - 1
-        if k % step or not 0 <= g < n_special:
+        if k % step or not 0 <= g < giants + paragraphs:
             return "normal"
-        return "giant" if g < GIANTS_PER_BATCH else "paragraph"
+        return "giant" if g < giants else "paragraph"
 
     def _page_row(self, batch: int, k: int):
         url = self.page_url(batch, k)
@@ -243,10 +256,10 @@ class Generator:
         return url, ts, _html(url, segs), "\n".join(lines), lang
 
     def pages(self, batch: int) -> str:
-        """Parquet directory with batch ``batch``: its new pages (exactly
-        GIANTS_PER_BATCH giants and PARAGRAPH_PAGES_PER_BATCH paragraph
-        pages at fixed positions) plus the re-crawled urls of the batch
-        before, each with its original content."""
+        """Parquet directory with batch ``batch``: its new pages (giants and
+        paragraph pages at fixed positions, see ``special_pages``) plus the
+        re-crawled urls of the batch before, each with its original
+        content."""
         path = self._dir("extract", batch)
         if _done(path):
             return path

@@ -56,16 +56,20 @@ def measure(args, spec: dict, root: str) -> tuple[dict, dict]:
         setup_s = time.perf_counter() - t0 - warm["prep"]
         timed, rss = [], 0.0
         if args.trace:
+            # traced batch between two untraced ones: the overhead is taken
+            # against both, so leftover warm-up in the first cancels out
             timed.append(_batch(1, wl))
             from tracing import Tracer, stage_metrics
             tr = Tracer(spark.sparkContext)
             traced = _batch(2, wl, lambda item: wl.traced_submit(item, tr))
+            timed.append(_batch(3, wl))
             wl.traced_wall = traced["wall"]
             metrics, stages = stage_metrics(spark.sparkContext, tr.groups(),
                                             traced["wall"], nproc)
             metrics.update(wl.layer_metrics(tr, traced["item"]))
-            per_doc = [u["wall"] / u["docs"] for u in (timed[0], traced)]
-            metrics["trace.overhead_frac"] = per_doc[1] / per_doc[0] - 1
+            untraced = statistics.mean(u["wall"] / u["docs"] for u in timed)
+            metrics["trace.overhead_frac"] = (traced["wall"] / traced["docs"]
+                                              / untraced - 1)
             tr.write(os.path.join(root, ".perfbench", "results",
                                   f"trace-{args.workload}-s{args.seed}.json"),
                      {"stages": stages, "metrics": metrics})
@@ -73,8 +77,7 @@ def measure(args, spec: dict, root: str) -> tuple[dict, dict]:
             while True:
                 timed.append(_batch(len(timed) + 1, wl))
                 rss = max(rss, probe.python_worker_peak_rss_mb(os.getpid()))
-                if (len(timed) >= wl.min_batches
-                        and sum(u["wall"] for u in timed) >= args.seconds):
+                if sum(u["wall"] for u in timed) >= args.seconds:
                     break
             med = statistics.median
             metrics = {"docs_per_s": med(u["docs"] / u["wall"] for u in timed),

@@ -11,12 +11,15 @@ are instrumented by rebinding module attributes for the duration of one
 
 from __future__ import annotations
 
+import itertools
 import json
 import time
 from collections import Counter
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JJavaError
+
+_tracers = itertools.count(1)  # job groups stay apart across tracers
 
 
 class Tracer:
@@ -25,6 +28,7 @@ class Tracer:
         self.spans: list[dict] = []
         self.counts: Counter = Counter()
         self._stack: list[dict] = []
+        self._group = f"pb{next(_tracers)}"
 
     def _set_group(self, rec):
         if self.sc is None:
@@ -33,7 +37,7 @@ class Tracer:
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             self.sc.setLocalProperty("spark.job.description", None)
         else:
-            self.sc.setJobGroup(f"pb-{rec['id']}", rec["name"])
+            self.sc.setJobGroup(f"{self._group}-{rec['id']}", rec["name"])
 
     def open(self, name: str) -> dict:
         parent = self._stack[-1]["id"] if self._stack else None
@@ -90,7 +94,7 @@ class Tracer:
                    if s["name"] == child and s["parent"] in ids)
 
     def groups(self) -> list[str]:
-        return [f"pb-{s['id']}" for s in self.spans]
+        return [f"{self._group}-{s['id']}" for s in self.spans]
 
     def write(self, path: str, extra: dict) -> None:
         t0 = min((s["start"] for s in self.spans), default=0.0)
