@@ -2,8 +2,9 @@
 
 Every input is a pure function of ``(seed, batch number, batch size)``:
 the same arguments give byte-identical files.  Batches are written once
-into ``<cache>/<kind>-s<seed>-n<size>/b<batch>/`` (a ``_DONE`` marker
-makes the cache safe against an interrupted write) and are never timed.
+into ``<cache>/<version>/<kind>-s<seed>-n<size>/b<batch>/`` (``<version>``
+hashes this file; a ``_DONE`` marker makes the cache safe against an
+interrupted write) and are never timed.
 
 Identifiers embed the batch number, so every url, doc_id and workspace of
 one batch is new to the process; the only repeats are the planted
@@ -13,6 +14,7 @@ re-crawls, which the pipelines must skip or drop.
 from __future__ import annotations
 
 import datetime
+import hashlib
 import html
 import itertools
 import os
@@ -31,6 +33,10 @@ _CONFUSIONS = [("s", "ſ"), ("ä", "aͤ"), ("ö", "oͤ"), ("ü", "uͤ"),
 _JUNK = ["advertisement", "cookie notice ok", "share this page"]
 _BASE_TS = datetime.datetime(2025, 3, 1, tzinfo=datetime.timezone.utc)
 MIMETYPE_PAGE = "application/vnd.prima.page+xml"
+# cached batches are keyed by this file's content too, so a changed
+# generator never reads batches an earlier version wrote
+with open(__file__, "rb") as _f:
+    VERSION = hashlib.sha256(_f.read()).hexdigest()[:12]
 
 # extract mix.  Page length (10-100 words, about uniform: the deciles are
 # 19, 28, ..., 90 words) and the noise model follow the sf0.1 documents
@@ -187,7 +193,8 @@ class Generator:
         return self.warm_size if batch == 0 else self.size
 
     def _dir(self, kind: str, batch: int) -> str:
-        return os.path.join(self.cache, f"{kind}-s{self.seed}-n{self.size_of(batch)}",
+        return os.path.join(self.cache, VERSION,
+                            f"{kind}-s{self.seed}-n{self.size_of(batch)}",
                             f"b{batch:04d}")
 
     # -- extract ------------------------------------------------------------

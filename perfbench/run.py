@@ -51,18 +51,19 @@ def measure(args, spec: dict, root: str) -> tuple[dict, dict]:
     spark = probe.start_spark(root, work, nproc)
     try:
         wl = workloads.WORKLOADS[args.workload](spark, cache, args.seed, work)
-        warm = _batch(0, wl)
+        warm = [_batch(b, wl) for b in range(wl.warm_batches)]
         # input preparation is not set-up work of the program
-        setup_s = time.perf_counter() - t0 - warm["prep"]
+        setup_s = time.perf_counter() - t0 - sum(w["prep"] for w in warm)
+        first = wl.warm_batches
         timed, rss = [], 0.0
         if args.trace:
             # traced batch between two untraced ones: the overhead is taken
             # against both, so leftover warm-up in the first cancels out
-            timed.append(_batch(1, wl))
+            timed.append(_batch(first, wl))
             from tracing import Tracer, stage_metrics
             tr = Tracer(spark.sparkContext)
-            traced = _batch(2, wl, lambda item: wl.traced_submit(item, tr))
-            timed.append(_batch(3, wl))
+            traced = _batch(first + 1, wl, lambda item: wl.traced_submit(item, tr))
+            timed.append(_batch(first + 2, wl))
             wl.traced_wall = traced["wall"]
             metrics, stages = stage_metrics(spark.sparkContext, tr.groups(),
                                             traced["wall"], nproc)
@@ -75,7 +76,7 @@ def measure(args, spec: dict, root: str) -> tuple[dict, dict]:
                      {"stages": stages, "metrics": metrics})
         else:
             while True:
-                timed.append(_batch(len(timed) + 1, wl))
+                timed.append(_batch(first + len(timed), wl))
                 rss = max(rss, probe.python_worker_peak_rss_mb(os.getpid()))
                 if sum(u["wall"] for u in timed) >= args.seconds:
                     break
@@ -94,7 +95,7 @@ def measure(args, spec: dict, root: str) -> tuple[dict, dict]:
     ctx = {**probe.context(nproc), "workload": args.workload,
            "seed": args.seed, "trace": args.trace,
            "host_steal_s": steal1 - steal0, "loadavg_1m": [load0, load1],
-           "setup_s": setup_s, "warmup_s": warm["wall"],
+           "setup_s": setup_s, "warmup_batch_s": [w["wall"] for w in warm],
            "timed_batch_s": [u["wall"] for u in timed],
            "timed_docs": [u["docs"] for u in timed]}
     # every listed metric, 0 for a layer this workload does not run
