@@ -14,7 +14,8 @@ Two execution modes:
 
 * default — run the kernel locally (the reference is a single-process tool;
   small lists don't need a cluster);
-* ``--spark`` — run the same lists through ``align_cogrouped`` on a local
+* ``--spark`` — run the same lists through ``align_cogrouped`` (the two
+  tables side-tagged into ``align_segments``' streaming kernel) on a local
   SparkSession: identical output (operators are bit-identical; see
   tests/test_cli.py), useful as a smoke of the cluster path.
 
@@ -56,7 +57,7 @@ def _build_parser() -> argparse.ArgumentParser:
     ap.add_argument("-S", "--separator", default="\t",
                     help="column separator (default: tab)")
     ap.add_argument("--spark", action="store_true",
-                    help="execute through the Spark cogroup operator")
+                    help="execute through the Spark two-table align operator")
     g1 = ap.add_mutually_exclusive_group(required=True)
     g1.add_argument("--strings1", nargs="+", help="list 1 as strings")
     g1.add_argument("--files1", nargs="+", help="list 1 as files of strings")

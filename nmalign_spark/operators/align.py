@@ -4,16 +4,19 @@ Spark mapping of SURVEY.md §2.3 J3-J6 + §2.10 U1: the reference's
 ``match(l1, l2)`` (align.py:17-166) runs *inside* an Arrow-vectorized kernel,
 one document per group; everything around it is Catalyst-native.
 
-Two entry points:
+Entry points, all on one core (:func:`align_lists_rows`):
 
 * :func:`align_pages` — hot path.  Input is the wide pages table (one row per
   url), so alignment is a **narrow** ``mapInPandas``: scan -> kernel -> rows,
   zero shuffles.  At 100 TB this is embarrassingly parallel; per-task cost is
   bounded by ``spark.sql.files.maxPartitionBytes``, and giant pages can be
-  isolated first via :func:`route_skew`.
+  split off first via :func:`route_skew` (salted path, operators/salt.py).
 * :func:`align_segments` — long-form input (url, side, seq_no, seg_text),
-  e.g. from external segmenters.  Needs one shuffle: ``groupBy(url).
-  applyInPandas``; AQE handles partition coalescing/skew splitting around it.
+  e.g. from external segmenters.  One hash repartition on url into
+  :func:`_kernel_partitions` partitions, an in-partition sort, and a
+  streaming ``mapInPandas`` that aligns many urls per Arrow batch.
+* :func:`align_cogrouped` — two tables (candidates, references) tagged
+  side 1/2 and unioned into the long form for :func:`align_segments`.
 
 Output schema (exploded assignment table, SURVEY.md §1.1):
 ``(url, i, j, line_no, beg, end, score, seg_text, extracted)`` where ``i``
@@ -34,7 +37,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..kernel.assign import match
-from ..sources.segments import extract_segments, reference_lines
+from ..sources.segments import extract_segments, nonempty_lines, reference_lines
 
 __all__ = ["ALIGN_SCHEMA", "align_pages", "align_segments",
            "align_cogrouped", "route_skew", "align_lists_rows"]
@@ -42,6 +45,25 @@ __all__ = ["ALIGN_SCHEMA", "align_pages", "align_segments",
 ALIGN_SCHEMA = ("url string, i int, j int, line_no int, beg int, end int, "
                 "score double, seg_text string, extracted string")
 _COLS = ["url", "i", "j", "line_no", "beg", "end", "score", "seg_text", "extracted"]
+
+
+def _passthrough_schema(schema: str, df, passthrough) -> str:
+    """``schema`` extended by ``df``'s types of the ``passthrough`` columns."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join([schema, *(f"{c} {types[c]}" for c in passthrough)])
+
+
+def _kernel_partitions(df) -> int:
+    """Partition count of every shuffle that feeds a Python alignment
+    kernel: one per core of the session (``defaultParallelism``).
+
+    AQE sizes partitions by bytes, and kernel input rows are tiny while
+    their kernel CPU is huge: on sf0.1 it folded ``align_segments`` onto
+    one core (16.7 s vs 1.5 s).  More partitions than cores cost too,
+    because every Arrow Python task pays a fixed executor-time toll even
+    when it holds no work (PLANS.md, "AQE and compute-bound Python
+    stages")."""
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def align_lists_rows(url: str, l1: list[str], l2: list[str], line_nos: list[int],
@@ -52,11 +74,9 @@ def align_lists_rows(url: str, l1: list[str], l2: list[str], line_nos: list[int]
     ``dist`` optionally injects the precomputed similarity matrix (the
     batched-across-documents scoring path, kernel/lev.py
     ``cdist_levenshtein_many``)."""
-    rows: list[tuple] = []
     if not l1 or not l2:
-        for i, seg in enumerate(l1):
-            rows.append((url, i, -1, -1, -1, -1, 0.0, seg, None))
-        return rows
+        return [(url, i, -1, -1, -1, -1, 0.0, seg, None)
+                for i, seg in enumerate(l1)]
     result, scores = match(l1, l2, normalization=normalization,
                            cutoff=cutoff, try_subseg=try_subseg, dist=dist)
     if try_subseg:
@@ -64,6 +84,7 @@ def align_lists_rows(url: str, l1: list[str], l2: list[str], line_nos: list[int]
     else:
         idx = result
         beg = end = np.full_like(idx, -1)
+    rows: list[tuple] = []
     for i, seg in enumerate(l1):
         j = int(idx[i])
         b, e = int(beg[i]), int(end[i])
@@ -128,15 +149,9 @@ def align_pages(pages_df, normalization=None, cutoff=None, try_subseg=True,
     kernel costs nothing and avoids a full-table join-back shuffle later.
     """
     passthrough = tuple(passthrough)
-    schema = ALIGN_SCHEMA
-    if passthrough:
-        by_name = {f.name: f for f in pages_df.schema.fields}
-        extra = ", ".join(f"{c} {by_name[c].dataType.simpleString()}"
-                          for c in passthrough)
-        schema = ALIGN_SCHEMA + ", " + extra
     return pages_df.select("url", "html", "text", *passthrough).mapInPandas(
         _make_pages_kernel(normalization, cutoff, try_subseg, passthrough),
-        schema=schema)
+        schema=_passthrough_schema(ALIGN_SCHEMA, pages_df, passthrough))
 
 
 def _group_to_doc(pdf: pd.DataFrame):
@@ -144,15 +159,9 @@ def _group_to_doc(pdf: pd.DataFrame):
     url = pdf["url"].iloc[0]
     p1 = pdf[pdf["side"] == 1].sort_values("seq_no")
     p2 = pdf[pdf["side"] == 2].sort_values("seq_no")
-    l1 = p1["seg_text"].tolist()
-    raw2 = p2["seg_text"].tolist()
-    # empty-line filter with index bookkeeping (ocrd/cli.py:219-226)
-    l2, line_nos = [], []
-    for no, line in zip(p2["seq_no"].tolist(), raw2):
-        if line and line.strip():
-            l2.append(line)
-            line_nos.append(no)
-    return url, l1, l2, line_nos
+    l2, line_nos = nonempty_lines(p2["seg_text"].tolist(),
+                                  p2["seq_no"].tolist())
+    return url, p1["seg_text"].tolist(), l2, line_nos
 
 
 def _make_segments_stream_kernel(normalization, cutoff, try_subseg):
@@ -191,75 +200,50 @@ def _make_segments_stream_kernel(normalization, cutoff, try_subseg):
 
 
 def align_segments(segments_df, normalization=None, cutoff=None,
-                   try_subseg=True, parallelism: int | None = None):
+                   try_subseg=True):
     """Long-form segments (url, side, seq_no, seg_text) -> alignment table.
 
     One hash shuffle on url + in-partition sort; the kernel is a streaming
     ``mapInPandas`` that handles many documents per Arrow batch (see
     ``_make_segments_stream_kernel`` — grouped-map per-group overhead does
-    not scale to millions of small groups).
-
-    The partition count is pinned (``repartition(n, "url")``) instead of
-    letting AQE pick: AQE coalesces shuffle partitions by BYTES, and segment
-    rows are tiny while the per-row kernel cost is huge — measured on sf0.1,
-    AQE folded the whole corpus into one partition and serialized the entire
-    alignment onto one core (16.7 s vs 1.5 s).  Compute-bound Python stages
-    must size partitions by CPU, not bytes.
+    not scale to millions of small groups).  The shuffle is pinned to
+    :func:`_kernel_partitions` partitions (``repartition(n, "url")``)
+    instead of letting AQE pick.
     """
-    spark = segments_df.sparkSession
-    n = parallelism or spark.sparkContext.defaultParallelism * 4
-    parts = segments_df.repartition(n, "url") \
+    parts = segments_df.repartition(_kernel_partitions(segments_df), "url") \
         .sortWithinPartitions("url", "side", "seq_no")
     return parts.mapInPandas(
         _make_segments_stream_kernel(normalization, cutoff, try_subseg),
         schema=ALIGN_SCHEMA)
 
 
-def _make_cogroup_kernel(normalization, cutoff, try_subseg):
-    def kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        url = (left["url"].iloc[0] if len(left) else right["url"].iloc[0])
-        l1 = left.sort_values("seq_no")["seg_text"].tolist()
-        l2, line_nos = [], []
-        for no, line in zip(right.sort_values("seq_no")["seq_no"],
-                            right.sort_values("seq_no")["seg_text"]):
-            if line and line.strip():
-                l2.append(line)
-                line_nos.append(int(no))
-        rows = align_lists_rows(url, l1, l2, line_nos,
-                                normalization, cutoff, try_subseg)
-        return pd.DataFrame(rows, columns=_COLS)
-    return kernel
-
-
 def align_cogrouped(candidates_df, references_df, normalization=None,
                     cutoff=None, try_subseg=True):
-    """Two-table input shape: candidates (url, seq_no, seg_text) cogrouped
-    with references (url, seq_no, seg_text) — ``cogroup().applyInPandas``
-    keyed by url (north_star: "per-url alignment runs as cogrouped Arrow
-    batches").
+    """Two-table input shape: candidates (url, seq_no, seg_text) and
+    references (url, seq_no, seg_text), for when the two sides live in
+    different tables (e.g. OCR output vs ground-truth collections).
 
-    Prefer :func:`align_segments` for massive corpora of small documents
-    (its streaming kernel amortizes per-group overhead); the cogroup form is
-    the natural fit when the two sides genuinely live in different tables
-    (e.g. OCR output vs ground-truth collections) and groups are
-    fewer/larger.  Output identical to the other paths on the same lists
+    The tables are tagged side 1/2 and unioned into the long segments form,
+    so the alignment is :func:`align_segments`' streaming kernel: the same
+    rows as :func:`align_lists_rows` on each url's two lists
     (tests/test_align_spark.py)."""
-    return candidates_df.groupBy("url").cogroup(
-        references_df.groupBy("url")).applyInPandas(
-        _make_cogroup_kernel(normalization, cutoff, try_subseg),
-        schema=ALIGN_SCHEMA)
+    def tagged(df, side):
+        return df.select("url", F.lit(side).alias("side"), "seq_no",
+                         "seg_text")
+    return align_segments(
+        tagged(candidates_df, 1).unionByName(tagged(references_df, 2)),
+        normalization=normalization, cutoff=cutoff, try_subseg=try_subseg)
 
 
-def route_skew(pages_df, giant_chars: int = 20_000, giant_parts: int = 64):
+def route_skew(pages_df, giant_chars: int = 20_000):
     """Split pages into (normal, giant) DataFrames by kernel-cost proxy.
 
     The alignment kernel is O(N·M·L) per url (SURVEY.md §4 custom-work #1):
     one giant page can dominate a task.  Cost proxy = length(text) (N·M grows
     quadratically with it, so a char threshold is a stable cost threshold).
-    Callers union the two aligned outputs; the giant branch gets spread
-    round-robin over ``giant_parts`` partitions so each giant lands alone.
+    Callers union the two aligned outputs.  The giant branch keeps its
+    input layout: the salted path (operators/salt.py) spreads its matrix
+    chunks with its own shuffle.
     """
     cost = F.length(F.col("text"))
-    normal = pages_df.where(cost < giant_chars)
-    giants = pages_df.where(cost >= giant_chars).repartition(giant_parts)
-    return normal, giants
+    return pages_df.where(cost < giant_chars), pages_df.where(cost >= giant_chars)

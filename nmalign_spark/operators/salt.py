@@ -14,21 +14,22 @@ pair (kernel/lev.py:198-222).  So the salted path:
    l2 lines, l1 split into row chunks of ``chunk_rows``; one output row per
    chunk carrying its slice of l1 plus the full l2 (duplicated per chunk —
    the price of spreading the quadratic stage over tasks; linear in chunks).
-2. **score** (``repartition(url, chunk_id)`` + ``mapInPandas``): each task
-   scores its chunk against full l2 with the SAME ``cdist_levenshtein`` the
-   unsalted kernel uses, emitting the chunk's float32 rows as one binary cell
-   (Arrow-friendly; no per-value Python).
-3. **assemble** (``groupBy(url).applyInPandas``): order chunks, stack the
-   matrix, run the sequential assignment once with the matrix injected
-   (``match(..., dist=...)``).  Output is **bit-identical** to the unsalted
-   path — verified by tests/test_salt.py equality against ``align_pages``.
+2. **score** (``repartition(page_uid, chunk_id)`` into one partition per
+   core + ``mapInPandas``): each task scores its chunks against full l2 with
+   the SAME ``cdist_levenshtein`` the unsalted kernel uses, emitting each
+   chunk's float32 rows as one binary cell (Arrow-friendly; no per-value
+   Python).
+3. **assemble** (``groupBy(page_uid).applyInPandas``): order chunks, stack
+   the matrix and hand it to the shared core ``align_lists_rows(...,
+   dist=...)``, which runs the sequential assignment once.  Output is
+   **bit-identical** to the unsalted path — verified by tests/test_salt.py
+   equality against ``align_pages``.
 
 Scale notes (100 TB): only pages routed giant by the O(len(text)) cost proxy
-(route_skew, operators/align.py:147-159) pay the two extra shuffles; the
+(``route_skew`` in operators/align.py) pay the two extra shuffles; the
 shuffle volume per giant is N×M×4 bytes of matrix + chunked strings, bounded
-by chunking only truly-giant pages (the normal path stays shuffle-free).  AQE
-handles residual imbalance among chunks.  ``chunk_rows`` bounds per-task
-memory at chunk_rows×M×4 bytes.
+by chunking only truly-giant pages (the normal path stays shuffle-free).
+``chunk_rows`` bounds per-task memory at chunk_rows×M×4 bytes.
 """
 
 from __future__ import annotations
@@ -40,23 +41,22 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..functions.normalize import make_preprocessor
-from ..kernel.assign import match
 from ..kernel.lev import cdist_levenshtein
 from ..sources.segments import extract_segments, reference_lines
-from .align import ALIGN_SCHEMA, _COLS, align_lists_rows, align_pages, route_skew
+from .align import (ALIGN_SCHEMA, _COLS, _kernel_partitions, _passthrough_schema,
+                    align_lists_rows, align_pages, route_skew)
 
 __all__ = ["align_pages_salted", "salted_align"]
 
-_CHUNK_SCHEMA = ("page_uid long, url string, chunk_id int, n_chunks int, "
-                 "i_offset int, l1_chunk array<string>, l2 array<string>, "
-                 "line_nos array<int>")
+_CHUNK_SCHEMA = ("page_uid long, url string, chunk_id int, "
+                 "l1_chunk array<string>, l2 array<string>, line_nos array<int>")
 _SCORED_SUFFIX = ", sim binary"
 
 
 def _make_chunker(chunk_rows: int, passthrough=()):
     def chunker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["page_uid", "url", "chunk_id", "n_chunks", "i_offset",
-                "l1_chunk", "l2", "line_nos", *passthrough]
+        cols = ["page_uid", "url", "chunk_id", "l1_chunk", "l2", "line_nos",
+                *passthrough]
         for pdf in batches:
             out = []
             extras_cols = [pdf[c] for c in passthrough]
@@ -65,15 +65,12 @@ def _make_chunker(chunk_rows: int, passthrough=()):
                 extras = tuple(col.iloc[k] for col in extras_cols)
                 l1 = extract_segments(html_b)
                 l2, line_nos = reference_lines(text)
-                if not l1 or not l2:
-                    # degenerate page: single empty chunk, resolved in assemble
-                    out.append((uid, url, 0, 1, 0, l1, l2, line_nos) + extras)
-                    continue
-                n_chunks = (len(l1) + chunk_rows - 1) // chunk_rows
-                for c in range(n_chunks):
+                # a page without segments still gets one (empty) chunk, so
+                # the assembler sees it
+                for c in range(max(1, -(-len(l1) // chunk_rows))):
                     lo = c * chunk_rows
-                    out.append((uid, url, c, n_chunks, lo,
-                                l1[lo:lo + chunk_rows], l2, line_nos) + extras)
+                    out.append((uid, url, c, l1[lo:lo + chunk_rows], l2,
+                                line_nos) + extras)
             yield pd.DataFrame(out, columns=cols)
     return chunker
 
@@ -84,11 +81,7 @@ def _make_scorer(normalization, cutoff):
         for pdf in batches:
             sims = []
             for l1c, l2 in zip(pdf["l1_chunk"], pdf["l2"]):
-                l1c, l2 = list(l1c), list(l2)
-                if not l1c or not l2:
-                    sims.append(b"")
-                    continue
-                m = cdist_levenshtein(l1c, l2, score_cutoff=cutoff,
+                m = cdist_levenshtein(list(l1c), list(l2), score_cutoff=cutoff,
                                       processor=preprocess)
                 sims.append(np.ascontiguousarray(m, dtype=np.float32).tobytes())
             out = pdf.copy()
@@ -100,45 +93,22 @@ def _make_scorer(normalization, cutoff):
 def _make_assembler(normalization, cutoff, try_subseg, passthrough=()):
     def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("chunk_id")
-        url = pdf["url"].iloc[0]
-        extras = tuple(pdf[c].iloc[0] for c in passthrough)
         l2 = list(pdf["l2"].iloc[0])
-        line_nos = [int(x) for x in pdf["line_nos"].iloc[0]]
-        l1 = [s for chunk in pdf["l1_chunk"] for s in chunk]
-        cols = _COLS + list(passthrough)
-        if not l1 or not l2:
-            rows = align_lists_rows(url, l1, l2, line_nos,
-                                    normalization, cutoff, try_subseg)
-            return pd.DataFrame([r + extras for r in rows], columns=cols)
         dist = np.vstack([
-            np.frombuffer(b, dtype=np.float32).reshape(-1, len(l2))
-            for b in pdf["sim"]])
-        result, scores = match(l1, l2, normalization=normalization,
-                               cutoff=cutoff, try_subseg=try_subseg,
-                               dist=dist)
-        if try_subseg:
-            idx, beg, end = result
-        else:
-            idx = result
-            beg = end = np.full_like(idx, -1)
-        rows = []
-        for i, seg in enumerate(l1):
-            j = int(idx[i])
-            if j < 0:
-                rows.append((url, i, -1, -1, -1, -1, 0.0, seg, None) + extras)
-                continue
-            line = l2[j]
-            b, e = int(beg[i]), int(end[i])
-            extracted = line[b:e] if b >= 0 else line
-            rows.append((url, i, j, line_nos[j], b, e, float(scores[i]),
-                         seg, extracted) + extras)
-        return pd.DataFrame(rows, columns=cols)
+            np.frombuffer(b, dtype=np.float32).reshape(len(chunk), len(l2))
+            for chunk, b in zip(pdf["l1_chunk"], pdf["sim"])])
+        rows = align_lists_rows(
+            pdf["url"].iloc[0], [s for chunk in pdf["l1_chunk"] for s in chunk],
+            l2, list(pdf["line_nos"].iloc[0]), normalization, cutoff,
+            try_subseg, dist=dist)
+        extras = tuple(pdf[c].iloc[0] for c in passthrough)
+        return pd.DataFrame([r + extras for r in rows],
+                            columns=_COLS + list(passthrough))
     return assemble
 
 
 def salted_align(giant_pages_df, normalization=None, cutoff=None,
-                 try_subseg=True, chunk_rows: int = 256,
-                 parallelism: int | None = None, passthrough=()):
+                 try_subseg=True, chunk_rows: int = 256, passthrough=()):
     """Giant pages -> alignment table via chunked parallel matrix scoring.
 
     Chunks are keyed by a per-ROW ``page_uid`` (``monotonically_increasing_
@@ -153,31 +123,24 @@ def salted_align(giant_pages_df, normalization=None, cutoff=None,
     output row (same contract as ``align_pages``) — cheaper and
     duplicate-safe vs joining metadata back by url afterwards.
 
-    The chunk-spreading shuffle pins its partition count: chunk rows are
-    small in BYTES but huge in kernel CPU, and AQE coalesces by bytes — it
-    would fold the chunks back onto few cores and defeat the salting (same
-    trap as align_segments; measured there: 16.7 s vs 1.5 s)."""
+    The chunk-spreading shuffle is pinned to ``_kernel_partitions`` (one
+    partition per core), like ``align_segments``: chunk rows are small in
+    BYTES but huge in kernel CPU, and AQE's byte-based coalescing would
+    fold the chunks back onto few cores and defeat the salting."""
     passthrough = tuple(passthrough)
-    spark = giant_pages_df.sparkSession
-    n = parallelism or spark.sparkContext.defaultParallelism * 4
-    chunk_schema = _CHUNK_SCHEMA
-    out_schema = ALIGN_SCHEMA
-    if passthrough:
-        by_name = {f.name: f for f in giant_pages_df.schema.fields}
-        extra = ", ".join(f"{c} {by_name[c].dataType.simpleString()}"
-                          for c in passthrough)
-        chunk_schema = _CHUNK_SCHEMA + ", " + extra
-        out_schema = ALIGN_SCHEMA + ", " + extra
+    chunk_schema = _passthrough_schema(_CHUNK_SCHEMA, giant_pages_df,
+                                       passthrough)
     pages = giant_pages_df.select("url", "html", "text", *passthrough) \
         .withColumn("page_uid", F.monotonically_increasing_id())
     chunks = pages.mapInPandas(
         _make_chunker(chunk_rows, passthrough), schema=chunk_schema)
-    scored = chunks.repartition(n, "page_uid", "chunk_id").mapInPandas(
+    scored = chunks.repartition(_kernel_partitions(chunks), "page_uid",
+                                "chunk_id").mapInPandas(
         _make_scorer(normalization, cutoff),
         schema=chunk_schema + _SCORED_SUFFIX)
     return scored.groupBy("page_uid").applyInPandas(
         _make_assembler(normalization, cutoff, try_subseg, passthrough),
-        schema=out_schema)
+        schema=_passthrough_schema(ALIGN_SCHEMA, giant_pages_df, passthrough))
 
 
 def align_pages_salted(pages_df, normalization=None, cutoff=None,

@@ -36,12 +36,12 @@ from __future__ import annotations
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (benchmark_gram_hashes,
                                compaction_demotions_df, curation_verdict_df,
                                unpersist_caches)
+from .tables import read_committed
 
 __all__ = ["CurationPipeline"]
 
@@ -56,19 +56,8 @@ class CurationPipeline:
     # -- helpers ------------------------------------------------------------
 
     def _read(self, spark, subdir: str):
-        """Read a committed side table; None ONLY when it doesn't exist yet.
-
-        Any other failure (corrupt partition, permission, transient FS
-        error) re-raises: treating it as "first run" would skip the resume
-        anti-join and re-append the whole batch — silent duplication in a
-        pipeline whose contract is idempotent resume."""
-        try:
-            return spark.read.parquet(f"{self.output_dir}/{subdir}")
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return None
-            raise
+        """Read a committed side table (None only when it doesn't exist)."""
+        return read_committed(spark, f"{self.output_dir}/{subdir}")
 
     def _write(self, df, subdir: str, partition_cols=()):
         w = df.write.mode("append")
@@ -128,6 +117,20 @@ class CurationPipeline:
         verdict = curation_verdict_df(
             docs.select("doc_id", "text"),
             bench_hashes=bench_hashes).cache()
+        # per-rule tallies BEFORE the corpus append: the verdict's plan
+        # reads the corpus (resume anti-join), and the append invalidates
+        # its cache, so an aggregate taken after it would re-judge the batch
+        # against the grown corpus
+        tallies = verdict.agg(
+            F.count(F.lit(1)).alias("n_judged"),
+            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
+            F.sum((~F.col("pass_gopher")).cast("long")).alias("n_gopher"),
+            F.sum(F.col("is_near_dup").cast("long")).alias("n_near_dup"),
+            F.sum(F.col("high_span_dup").cast("long")).alias("n_high_span"),
+            F.sum(F.col("is_contaminated").cast("long"))
+            .alias("n_contaminated"))
+        rules = spark.createDataFrame([tallies.first()], tallies.schema) \
+            .withColumn("run_id", F.lit(run_id))
         kept = (docs.join(verdict.where("keep").select("doc_id"), "doc_id")
                 .withColumn("bucket",
                             F.pmod(F.xxhash64("doc_id"),
@@ -147,15 +150,6 @@ class CurationPipeline:
         part = (this_run.groupBy("lang", "bucket")
                 .agg(F.count(F.lit(1)).alias("n_kept"))
                 .withColumn("run_id", F.lit(run_id)))
-        rules = (verdict.agg(
-            F.count(F.lit(1)).alias("n_judged"),
-            F.sum((~F.col("keep")).cast("long")).alias("n_dropped"),
-            F.sum((~F.col("pass_gopher")).cast("long")).alias("n_gopher"),
-            F.sum(F.col("is_near_dup").cast("long")).alias("n_near_dup"),
-            F.sum(F.col("high_span_dup").cast("long")).alias("n_high_span"),
-            F.sum(F.col("is_contaminated").cast("long"))
-            .alias("n_contaminated"))
-            .withColumn("run_id", F.lit(run_id)))
         self._write(part, "_lineage")
         self._write(rules, "_rules")
         verdict.unpersist()

@@ -22,10 +22,11 @@ Scale design (BASELINE.json north_rule / SURVEY.md §7 step 7):
 * **Lineage + metrics** — per (run_id, crawl_date, bucket): row counts,
   match counts, mean score, appended to ``_lineage`` (the reference's shared
   stats dict, ocrd/cli.py:111-118, as a table).
-* **No driver-side loops** — every step is a DataFrame op; the only shuffle
-  in the whole job is the tiny lineage aggregation (alignment itself is a
-  narrow mapInPandas; the resume anti-join broadcasts the committed-url set
-  when small, else AQE picks a shuffle join).
+* **No driver-side loops** — every step is a DataFrame op.  Aligning the
+  normal pages is a narrow mapInPandas; the shuffles are the salted giant
+  branch's two (operators/salt.py), the tiny lineage aggregation, and the
+  resume anti-join (a broadcast when the committed-url set is small, else
+  AQE picks a shuffle join).
 """
 
 from __future__ import annotations
@@ -39,6 +40,7 @@ from ..functions.normalize import DEFAULT_NORMALIZATION
 from ..operators.align import align_pages, route_skew
 from ..operators.assemble import assemble_pages
 from ..operators.salt import salted_align
+from .tables import read_committed
 
 __all__ = ["ExtractionPipeline"]
 
@@ -46,24 +48,20 @@ __all__ = ["ExtractionPipeline"]
 class ExtractionPipeline:
     def __init__(self, output_dir: str, normalization=None, cutoff=None,
                  try_subseg: bool = True, n_buckets: int = 16,
-                 giant_chars: int = 20_000, giant_parts: int = 64):
+                 giant_chars: int = 20_000):
         self.output_dir = output_dir.rstrip("/")
         self.normalization = DEFAULT_NORMALIZATION if normalization is None else normalization
         self.cutoff = cutoff
         self.try_subseg = try_subseg
         self.n_buckets = n_buckets
         self.giant_chars = giant_chars
-        self.giant_parts = giant_parts
 
     # -- helpers ------------------------------------------------------------
 
     def _committed_urls(self, spark):
-        """Distinct urls already in the output (empty DF if first run)."""
-        try:
-            return (spark.read.parquet(f"{self.output_dir}/aligned")
-                    .select("url").distinct())
-        except Exception:
-            return None
+        """Distinct urls already in the output (None on the first run)."""
+        committed = read_committed(spark, f"{self.output_dir}/aligned")
+        return None if committed is None else committed.select("url").distinct()
 
     def _align(self, pages):
         return align_pages(pages, normalization=self.normalization,
@@ -92,7 +90,7 @@ class ExtractionPipeline:
             n_before = pages.count()
             pages = pages.join(done, "url", "left_anti")
             n_skipped = n_before - pages.count()
-        normal, giants = route_skew(pages, self.giant_chars, self.giant_parts)
+        normal, giants = route_skew(pages, self.giant_chars)
         fast = self._align(normal)
         # giants: matrix-chunk salting; warc_ts/lang ride through the salted
         # path as passthrough columns — a join-back by url would fan out

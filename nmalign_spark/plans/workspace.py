@@ -1,7 +1,8 @@
 """The ``ocrd-nmalign-merge`` production flow over METS workspaces, end to
 end on Spark: METS scan -> zip_input_files pairing -> distributed file
-reads -> PAGE-XML / plaintext extraction -> cogrouped alignment -> PAGE-XML
-merge-back -> workspace export with an updated METS.
+reads -> PAGE-XML / plaintext extraction -> alignment of the two line tables
+(``align_cogrouped``) -> PAGE-XML merge-back -> workspace export with an
+updated METS.
 
 Reference surface: /root/reference/nmalign/ocrd/cli.py (the processor's
 ``process_workspace``/``process_page_file``).  A user of the reference
@@ -16,11 +17,12 @@ PHYS_0001 everywhere) never collide.
 
 Scale shape: two narrow ``mapInPandas`` parses (METS, PAGE) + one
 ``binaryFile`` scan joined by (workspace, href) + one grouped sort for
-multi-file plaintext partners + the cogrouped align kernel + the merge
-kernel — the only shuffles are the pairing aggregation, the href join, and
-the alignment cogroup, all on near-uniform keys.  The per-workspace METS
-rewrite at export is a tiny serial commit per workspace (the METS is one
-shared XML document — same split as the reference's METS server).
+multi-file plaintext partners + the streaming align kernel + the merge
+kernel.  The align kernel's shuffle is a url repartition into one partition
+per core; the other shuffles (pairing aggregation, href join, merge-back
+grouping) sit on near-uniform keys and are left to AQE.  The per-workspace
+METS rewrite at export is a tiny serial commit per workspace (the METS is
+one shared XML document — same split as the reference's METS server).
 """
 
 from __future__ import annotations
@@ -255,7 +257,9 @@ def export_workspaces(merged_df, output_grp: str,
     ``mets.xml`` read): a mid-write failure on a later workspace would
     otherwise leave earlier workspaces with orphaned PAGE-XML blobs (no
     METS registration) and surface as a wrapped Py4J error instead of
-    ``FileExistsError``."""
+    ``FileExistsError``.  ``merged_df`` is persisted across the guard and
+    the write pass, so the whole parse/align/merge plan runs once, not once
+    per pass."""
     import pandas as pd
 
     meta = (merged_df
@@ -263,9 +267,6 @@ def export_workspaces(merged_df, output_grp: str,
             .withColumn("workspace", F.expr(
                 "substring(url, 1, length(url) - length("
                 f"substring_index(url, '{_SEP}', -1)) - 1)")))
-
-    for r in meta.select("workspace").distinct().collect():
-        _check_output_grp(r.workspace, output_grp, overwrite)
 
     def write_pages(batches):
         for pdf in batches:
@@ -279,13 +280,19 @@ def export_workspaces(merged_df, output_grp: str,
                 out.append((ws_dir, page_id))
             yield pd.DataFrame(out, columns=["workspace", "page_id"])
 
-    per_ws_rows = (meta.select("workspace", "page_id", "xml")
-                   .mapInPandas(write_pages,
-                                schema="workspace string, page_id string")
-                   .groupBy("workspace")
-                   .agg(F.sort_array(F.collect_list("page_id"))
-                        .alias("page_ids"))
-                   .collect())
+    merged_df.persist()
+    try:
+        for r in meta.select("workspace").distinct().collect():
+            _check_output_grp(r.workspace, output_grp, overwrite)
+        per_ws_rows = (meta.select("workspace", "page_id", "xml")
+                       .mapInPandas(write_pages,
+                                    schema="workspace string, page_id string")
+                       .groupBy("workspace")
+                       .agg(F.sort_array(F.collect_list("page_id"))
+                            .alias("page_ids"))
+                       .collect())
+    finally:
+        merged_df.unpersist()
     total = 0
     for r in per_ws_rows:
         _register_files(r.workspace, output_grp, r.page_ids, overwrite)

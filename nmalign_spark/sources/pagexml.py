@@ -111,8 +111,9 @@ def pagexml_segments_df(pages_df, side: int = 2, xml_col: str = "xml",
 
     Note: the whitespace-only-line filter is NOT applied here — it belongs
     to the aligner (ocrd/cli.py:219-226 drops empty l2 lines with index
-    bookkeeping, which ``align_segments``/``align_cogrouped`` already do),
-    so this source stays a faithful 1:1 projection of the document.
+    bookkeeping, which every aligner applies through
+    ``sources.segments.nonempty_lines``), so this source stays a faithful
+    1:1 projection of the document.
     """
     import pandas as pd
     from pyspark.sql import functions as F

@@ -19,8 +19,9 @@ import re
 
 from pyspark.sql import functions as F
 
-__all__ = ["extract_segments", "reference_lines", "segments_from_pages",
-           "inline_strings_df", "files_df", "filelist_df", "SEGMENTS_SCHEMA"]
+__all__ = ["extract_segments", "nonempty_lines", "reference_lines",
+           "segments_from_pages", "inline_strings_df", "files_df",
+           "filelist_df", "SEGMENTS_SCHEMA"]
 
 SEGMENTS_SCHEMA = "url string, side int, seq_no int, seg_text string"
 
@@ -60,21 +61,24 @@ def extract_segments(html_bytes: bytes | str) -> list[str]:
     return out
 
 
-def reference_lines(text: str) -> tuple[list[str], list[int]]:
-    """text -> (non-empty reference lines, their original line numbers).
-
-    Replicates the reference's empty-line filter with index bookkeeping
-    (ocrd/cli.py:219-226 deletes whitespace-only l2 lines from both parallel
-    lists in reverse order; we keep the original line_no so the output stays
-    joinable to the raw text).
-    """
-    lines = text.split("\n") if text else []
+def nonempty_lines(lines, line_nos) -> tuple[list[str], list[int]]:
+    """The reference's empty-line filter with index bookkeeping: drop
+    ``None`` and whitespace-only reference lines, keep the original line
+    number of each survivor (ocrd/cli.py:219-226 deletes them from both
+    parallel lists in reverse order; keeping ``line_no`` makes the output
+    joinable to the raw text).  Every aligner builds its ``l2`` here."""
     keep_lines, keep_nos = [], []
-    for no, line in enumerate(lines):
-        if line.strip():
+    for no, line in zip(line_nos, lines):
+        if line and line.strip():
             keep_lines.append(line)
             keep_nos.append(no)
     return keep_lines, keep_nos
+
+
+def reference_lines(text: str) -> tuple[list[str], list[int]]:
+    """text -> (non-empty reference lines, their original line numbers)."""
+    lines = text.split("\n") if text else []
+    return nonempty_lines(lines, range(len(lines)))
 
 
 def segments_from_pages(pages_df):

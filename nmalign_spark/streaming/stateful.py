@@ -34,6 +34,7 @@ from __future__ import annotations
 import pandas as pd
 
 from ..operators.align import ALIGN_SCHEMA, _COLS, align_lists_rows
+from ..sources.segments import nonempty_lines
 
 SEGMENTS_TS_DDL = "url string, side int, seq_no int, seg_text string"
 _STATE_DDL = "sides array<int>, seqs array<int>, texts array<string>"
@@ -81,11 +82,9 @@ def _make_stateful_kernel(normalization, cutoff, try_subseg, stale_ms: int):
 def _emit(url, sides, seqs, texts, normalization, cutoff, try_subseg):
     order = sorted(range(len(sides)), key=lambda k: (sides[k], seqs[k]))
     l1 = [texts[k] for k in order if sides[k] == 1]
-    l2, line_nos = [], []
-    for k in order:
-        if sides[k] == 2 and texts[k] and texts[k].strip():
-            l2.append(texts[k])
-            line_nos.append(seqs[k])
+    refs = [k for k in order if sides[k] == 2]
+    l2, line_nos = nonempty_lines([texts[k] for k in refs],
+                                  [seqs[k] for k in refs])
     rows = align_lists_rows(url, l1, l2, line_nos,
                             normalization, cutoff, try_subseg)
     return pd.DataFrame(rows, columns=_COLS)

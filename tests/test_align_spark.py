@@ -99,16 +99,33 @@ def test_unmatched_short_lines_tolerated(spark, sf_small):
 
 
 def test_cogrouped_equals_segments_path(spark, sf_small):
-    """cogroup(two tables) == align_segments(one long table) == align_pages."""
+    """align_cogrouped(two tables) == align_segments(one long table) == the
+    local core ``align_lists_rows`` per url — including a url with candidates
+    only (rows with j = -1), one with references only (no rows), and
+    whitespace-only / None reference lines (filtered, original numbers
+    kept)."""
     import pandas as pd
     from pyspark.sql import functions as F
     from nmalign_spark.functions.normalize import DEFAULT_NORMALIZATION
-    from nmalign_spark.operators.align import align_cogrouped, align_segments
+    from nmalign_spark.operators.align import _COLS, align_cogrouped, align_segments
     from nmalign_spark.sources.pages import pages_from_documents
-    from nmalign_spark.sources.segments import segments_from_pages
+    from nmalign_spark.sources.segments import (SEGMENTS_SCHEMA, nonempty_lines,
+                                                segments_from_pages)
 
+    edge = spark.createDataFrame([
+        ("edge://cand-only", 1, 0, "a lonely candidate line"),
+        ("edge://cand-only", 1, 1, "and a second one"),
+        ("edge://ref-only", 2, 0, "a reference nobody aligns to"),
+        ("edge://blank-refs", 1, 0, "first line of the page"),
+        ("edge://blank-refs", 1, 1, "second line of the page"),
+        ("edge://blank-refs", 2, 0, "   "),
+        ("edge://blank-refs", 2, 1, "first line of the page"),
+        ("edge://blank-refs", 2, 2, None),
+        ("edge://blank-refs", 2, 3, ""),
+        ("edge://blank-refs", 2, 4, "second line of the page"),
+    ], SEGMENTS_SCHEMA)
     pages = pages_from_documents(spark, sf_small).limit(40)
-    segs = segments_from_pages(pages).cache()
+    segs = segments_from_pages(pages).unionByName(edge).cache()
     cand = segs.where(F.col("side") == 1).select("url", "seq_no", "seg_text")
     refs = segs.where(F.col("side") == 2).select("url", "seq_no", "seg_text")
 
@@ -117,7 +134,30 @@ def test_cogrouped_equals_segments_path(spark, sf_small):
         return (pdf.sort_values(["url", "i"]).reset_index(drop=True)
                 .reindex(sorted(pdf.columns), axis=1))
 
-    a = canon(align_cogrouped(cand, refs,
-                              normalization=DEFAULT_NORMALIZATION))
+    cogrouped = align_cogrouped(cand, refs, normalization=DEFAULT_NORMALIZATION)
+    a = canon(cogrouped)
     b = canon(align_segments(segs, normalization=DEFAULT_NORMALIZATION))
     pd.testing.assert_frame_equal(a, b)
+
+    sides = {}
+    for r in segs.collect():
+        sides.setdefault(r.url, {1: [], 2: []})[r.side].append((r.seq_no, r.seg_text))
+    want = []
+    for url, by_side in sides.items():
+        l1 = [t for _, t in sorted(by_side[1], key=lambda p: p[0])]
+        refs_sorted = sorted(by_side[2], key=lambda p: p[0])
+        l2, nos = nonempty_lines([t for _, t in refs_sorted],
+                                 [no for no, _ in refs_sorted])
+        want += align_lists_rows(url, l1, l2, nos,
+                                 normalization=DEFAULT_NORMALIZATION,
+                                 cutoff=None, try_subseg=True)
+    got = [tuple(r) for r in cogrouped.select(*_COLS).collect()]
+    key = lambda row: (row[0], row[1])  # (url, i) is unique
+    assert sorted(got, key=key) == sorted(want, key=key)
+
+    by_url = {}
+    for row in got:
+        by_url.setdefault(row[0], []).append(row)
+    assert [r[2] for r in by_url["edge://cand-only"]] == [-1, -1]
+    assert "edge://ref-only" not in by_url
+    assert sorted(r[3] for r in by_url["edge://blank-refs"]) == [1, 4]

@@ -149,3 +149,20 @@ def test_decontamination_tier_via_bench_df(spark, sf_small, tmp_path):
     assert stats["n_kept"] == base["n_kept"] - 1
     rules = spark.read.parquet(f"{out}/_rules").collect()[0]
     assert rules["n_contaminated"] >= 1
+
+
+def test_rules_tally_the_judged_batch_on_a_later_run(spark, sf_small,
+                                                     tmp_path):
+    """Every run's ``_rules`` row tallies the batch that run judged — also
+    on a second run into the same output, where the verdict's plan reads
+    the corpus that the run appends to."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    runs = [CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == k))
+            for k in (0, 1)]
+    rules = {r.run_id: r for r in spark.read.parquet(f"{out}/_rules").collect()}
+    for stats in runs:
+        row = rules[stats["run_id"]]
+        judged = stats["n_in"] - stats["n_resumed"] - stats["n_committed_dup"]
+        assert row.n_judged == judged > 0
+        assert stats["n_kept"] + row.n_dropped == row.n_judged

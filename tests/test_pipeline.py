@@ -43,3 +43,19 @@ def test_pipeline_idempotent_when_all_committed(spark, sf_small, outdir):
     assert s["pages_skipped_resume"] == 10
     after = spark.read.parquet(f"{outdir}/aligned").count()
     assert before == after
+
+
+def test_unreadable_aligned_table_is_not_first_run(spark, sf_small, outdir):
+    """A corrupt committed ``aligned/`` must abort the run before anything
+    new lands in it — not be taken for a first run and re-appended."""
+    import os
+    aligned = os.path.join(outdir, "aligned")
+    os.makedirs(aligned)
+    with open(os.path.join(aligned, "part-corrupt.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    pages = pages_from_documents(spark, sf_small).limit(5)
+    with pytest.raises(Exception) as exc:
+        ExtractionPipeline(outdir).run(spark, pages)
+    assert "PATH_NOT_FOUND" not in str(exc.value)
+    landed = [os.path.join(d, f) for d, _, fs in os.walk(aligned) for f in fs]
+    assert landed == [os.path.join(aligned, "part-corrupt.parquet")]

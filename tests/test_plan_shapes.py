@@ -142,3 +142,60 @@ def test_temperature_mix_corpus_never_shuffles(spark, sf_small):
     # group, never a join repartition of the corpus
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
+
+
+def _repartition_counts(plan: str) -> list[int]:
+    """Partition counts of every ``repartition(n, ...)`` exchange."""
+    import re
+    return [int(m.group(1)) for m in re.finditer(
+        r"Exchange \w+\((?:[^()]|\([^()]*\))*?(\d+)\), REPARTITION_BY_NUM",
+        plan)]
+
+
+def test_cogrouped_align_runs_the_streaming_segments_kernel(spark):
+    """``align_cogrouped`` is the side-tagged union fed to
+    ``align_segments``: no grouped-map cogroup node, and its one kernel
+    shuffle is a url repartition into one partition per core."""
+    from nmalign_spark.operators.align import align_cogrouped
+
+    ddl = "url string, seq_no int, seg_text string"
+    cand = spark.createDataFrame([("u", 0, "alpha beta")], ddl)
+    refs = spark.createDataFrame([("u", 0, "alpha beta")], ddl)
+    df = align_cogrouped(cand, refs)
+    df.collect()
+    plan = _plan(df)
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "MapInPandas" in plan
+    n = spark.sparkContext.defaultParallelism
+    assert "hashpartitioning(url#" in plan
+    assert set(_repartition_counts(plan)) == {n}
+
+
+def test_pipeline_kernel_exchanges_one_partition_per_core(spark, sf_small,
+                                                          tmp_path):
+    """The extraction job's aligned output: the giant branch keeps its
+    input layout (no 64-way round-robin in front of the salted path), and
+    every pinned exchange — the salted scorer's (page_uid, chunk_id)
+    shuffle and the synthetic source's fan-out — has one partition per
+    core."""
+    import pytest
+
+    from nmalign_spark.plans.pipeline import ExtractionPipeline
+    from nmalign_spark.sources.pages import pages_from_documents
+
+    class Captured(Exception):
+        pass
+
+    def capture(df, subdir, partition_cols=()):
+        raise Captured(df)
+
+    pipe = ExtractionPipeline(str(tmp_path / "out"), giant_chars=400)
+    pipe._write = capture
+    with pytest.raises(Captured) as got:
+        pipe.run(spark, pages_from_documents(spark, sf_small))
+    plan = _plan(got.value.args[0])
+    n = spark.sparkContext.defaultParallelism
+    assert "RoundRobinPartitioning(64)" not in plan
+    assert "hashpartitioning(page_uid#" in plan
+    counts = _repartition_counts(plan)
+    assert counts and set(counts) == {n}

@@ -98,7 +98,7 @@ def test_gate_window_integrity():
     # every two consecutive rounds
     import json
     from pathlib import Path
-    prev = Path(entry_mod._REPO) / "CORRECTNESS_r04.json"
+    prev = Path(entry_mod._REPO) / "CORRECTNESS_r05.json"
     if prev.exists():
         checked = set(json.loads(prev.read_text()))
         unsampled = [k for k in qs if k not in checked]
