@@ -63,7 +63,11 @@ def _q_align_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_queries_oracle.py::test_gate_window_integrity pins that the
 # first-50 window contains all of groups (1)+(2).
 _GATE_PRIORITY = [
-    # (1) keys whose code changed in round 6: one alignment core (the
+    # (1) keys whose code changed in round 7: training_split (its kept-id
+    # manifest is a local checkpoint instead of a temp-directory parquet
+    # table) —
+    "training_split",
+    # and in round 6: one alignment core (the
     # cogroup kernel, the salted assembler's row loop and the copied
     # empty-line filters folded into align_lists_rows/nonempty_lines; one
     # partition per core for every align-kernel shuffle) — every query

@@ -1227,17 +1227,11 @@ ORACLE_VERDICT = _oracle_verdict()
 
 # --- training split: verdict -> domain cap -> temperature (the endpoint) ----
 
-def materialize_ids(spark, df, tag: str):
-    """Write a (small) id manifest to a parquet table and read it back —
-    the production materialization boundary between pipeline stages
-    (CurationPipeline does the same for its kept corpus: write, then read
-    the committed table).  A fresh directory per call keeps gate/bench
-    invocations independent; at production scale the caller passes its
-    own table path via the pipeline instead."""
-    import tempfile
-    path = tempfile.mkdtemp(prefix=f"nmalign-{tag}-")
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+def materialize_ids(df):
+    """Compute a (small) id manifest once for all its readers: unlike
+    ``.cache()``, a local checkpoint is freed once the returned frame is
+    garbage-collected, and unlike a parquet copy it leaves no directory."""
+    return df.localCheckpoint(eager=True)
 
 
 def training_split(spark, sf_dir):
@@ -1261,15 +1255,9 @@ def training_split(spark, sf_dir):
     # The kept-id manifest is consumed by THREE downstream branches (host
     # counts, language counts + global min, final join); without a
     # materialization each branch re-executes the whole verdict stack
-    # (~3x the verdict cost, measured at sf0.1).  The manifest is written
-    # to a parquet table and read back — the SAME shape CurationPipeline
-    # uses for its kept corpus (write, then read the committed table), so
-    # the registered query and the pipeline measure one code path and no
-    # executor-storage cache outlives the call (ADVICE r4: the old
-    # .cache() was never unpersisted).
+    # (~3x the verdict cost, measured at sf0.1).
     kept = materialize_ids(
-        spark, curation_verdict(spark, sf_dir).where("keep")
-        .select("doc_id"), "training-manifest")
+        curation_verdict(spark, sf_dir).where("keep").select("doc_id"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
     base = docs.join(kept, "doc_id")
     host_id = F.when(F.col("doc_id") % 4 == 0, F.lit(0)) \

@@ -1,9 +1,13 @@
 """CurationPipeline: resumable, lineage-tracked clean-corpus writes with
 at-ingest incremental dedup against the committed hash index."""
 
+import os
+
 import pyspark.sql.functions as F
+import pytest
 
 from nmalign_spark.plans.curation import CurationPipeline
+from nmalign_spark.plans.tables import read_committed
 
 
 def _docs(spark, sf_small):
@@ -61,29 +65,6 @@ def test_committed_hash_index_drops_recrawled_text(spark, sf_small,
     # the texts that were DROPPED in run 1 are not in the corpus, so the
     # re-crawl judges them again and drops them again
     assert stats["n_kept"] == 0
-
-
-def test_hash_index_self_heals_after_partial_commit(spark, sf_small,
-                                                    tmp_path):
-    """Crash between the corpus commit and the _hashes append: the next
-    run must rebuild the missing index rows from the corpus itself, so a
-    re-crawl of that run's texts is still dropped at ingest."""
-    import shutil
-    out = str(tmp_path / "cur")
-    docs = _docs(spark, sf_small)
-    first = CurationPipeline(out).run(spark, docs)
-    # simulate the crash: the corpus run committed but its index append
-    # was lost entirely
-    shutil.rmtree(f"{out}/_hashes")
-    recrawl = docs.select((F.col("doc_id") + 10_000_000).alias("doc_id"),
-                          "text", "lang")
-    stats = CurationPipeline(out).run(spark, recrawl)
-    assert stats["n_committed_dup"] == first["n_kept"]
-    assert stats["n_kept"] == 0
-    # and the rebuilt index now covers the first run
-    hashes = spark.read.parquet(f"{out}/_hashes")
-    assert hashes.where(F.col("run_id") == first["run_id"]).count() \
-        == first["n_kept"]
 
 
 def test_read_failure_is_not_first_run(spark, sf_small, tmp_path):
@@ -166,3 +147,102 @@ def test_rules_tally_the_judged_batch_on_a_later_run(spark, sf_small,
         judged = stats["n_in"] - stats["n_resumed"] - stats["n_committed_dup"]
         assert row.n_judged == judged > 0
         assert stats["n_kept"] + row.n_dropped == row.n_judged
+
+
+class Killed(Exception):
+    pass
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4])
+def test_run_survives_a_kill_before_every_write(spark, sf_small, tmp_path, k):
+    """A run killed before its k-th table append (corpus, _hashes,
+    _lineage, _rules) leaves nothing visible: the re-run of the same batch
+    commits each kept doc_id once, with its hash rows and its _rules row."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    first = CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 0))
+    pipe = CurationPipeline(out)
+    write, calls = pipe._write, []
+
+    def dying(df, subdir, partition_cols=()):
+        calls.append(subdir)
+        if len(calls) == k:
+            raise Killed(subdir)
+        write(df, subdir, partition_cols)
+
+    pipe._write = dying
+    with pytest.raises(Killed):
+        pipe.run(spark, docs)
+    again = CurationPipeline(out).run(spark, docs)
+    assert again["n_resumed"] == first["n_kept"]
+
+    def committed(subdir):
+        return read_committed(spark, f"{out}/{subdir}", f"{out}/_rules")
+
+    per_run = {r.run_id: r.n for r in committed("corpus").groupBy("run_id")
+               .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert per_run == {first["run_id"]: first["n_kept"],
+                       again["run_id"]: again["n_kept"]}
+    ids = [r.doc_id for r in committed("corpus").select("doc_id").collect()]
+    assert len(ids) == len(set(ids))
+    hashed = {r.run_id: r.n for r in committed("_hashes").groupBy("run_id")
+              .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert {r: n for r, n in hashed.items() if n} == \
+        {r: n for r, n in per_run.items() if n}
+    rules = {r.run_id for r in committed("_rules").collect()}
+    assert rules == {first["run_id"], again["run_id"]}
+
+
+def test_batch_that_keeps_nothing(spark, sf_small, tmp_path):
+    """A first run that drops every document commits an empty corpus
+    (n_kept 0, read from the corpus write itself), and the next run is
+    still a first run for the corpus, not a failure to read it."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    junk = docs.select("doc_id", F.lit("too short").alias("text"), "lang")
+    stats = CurationPipeline(out).run(spark, junk)
+    assert stats["n_kept"] == 0 and stats["n_resumed"] == 0
+    rules = spark.read.parquet(f"{out}/_rules").collect()
+    assert [(r.n_judged, r.n_dropped) for r in rules] == \
+        [(stats["n_in"], stats["n_in"])]
+    again = CurationPipeline(out).run(spark, docs)
+    assert again["n_resumed"] == 0 and again["n_kept"] > 0
+
+
+def test_compaction_crash_between_the_renames_rolls_forward(
+        spark, sf_small, tmp_path, monkeypatch):
+    """compact() killed between its two directory renames leaves no live
+    corpus; the next read must finish the swap (the compacted copy is
+    complete), not take the corpus for absent and start over."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    CurationPipeline(out).run(spark, docs)
+    kept = spark.read.parquet(f"{out}/corpus")
+    kept_ids = {r.doc_id for r in kept.select("doc_id").collect()}
+    recrawl = kept.select(
+        (F.col("doc_id") + 10_000_000).alias("doc_id"),
+        F.array_join(F.filter(F.split("text", " "),
+                              lambda x, i: ((i + 1) % 7) != 0),
+                     " ").alias("text"),
+        "lang")
+    assert CurationPipeline(out).run(spark, recrawl)["n_kept"] > 0
+    rename, calls = os.rename, []
+
+    def dying(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise Killed(src)
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", dying)
+    with pytest.raises(Killed):
+        CurationPipeline(out).compact(spark)
+    monkeypatch.setattr(os, "rename", rename)
+    assert not os.path.exists(f"{out}/corpus")
+    again = CurationPipeline(out).run(spark, docs)
+    assert again["n_resumed"] == len(kept_ids) and again["n_kept"] == 0
+    assert sorted(os.listdir(out)) == ["_hashes", "_lineage", "_rules", "corpus"]
+    after = {r.doc_id for r in spark.read.parquet(f"{out}/corpus")
+             .select("doc_id").collect()}
+    assert after == kept_ids
+    assert CurationPipeline(out).compact(spark)["n_dropped"] == 0

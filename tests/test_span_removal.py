@@ -152,3 +152,21 @@ def test_training_split_staged_semantics(spark, sf_small):
     assert 0 < len(ids) < len(nat_ids)
     per_host = Counter(r.host for r in split)
     assert all(v <= DOMAIN_CAP_K for v in per_host.values())
+
+
+def test_materialize_ids_leaves_no_temp_directory(spark):
+    """The training split's id manifest is materialized without a
+    scratch directory: two calls leave no new ``nmalign-*`` entry in the
+    temp dir, and the rows read back intact."""
+    import glob
+    import os
+    import tempfile
+
+    from nmalign_spark.operators.dedup import materialize_ids
+
+    pattern = os.path.join(tempfile.gettempdir(), "nmalign-*")
+    before = set(glob.glob(pattern))
+    got = [materialize_ids(spark.range(50).withColumnRenamed("id", "doc_id"))
+           for _ in range(2)]
+    assert set(glob.glob(pattern)) == before
+    assert [sorted(r.doc_id for r in g.collect()) for g in got] == [list(range(50))] * 2
