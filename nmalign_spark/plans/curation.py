@@ -53,10 +53,13 @@ class CurationPipeline(CommittedTables):
         """
         run_id = self._run_id(spark, run_id, "cur", "corpus")
         t0 = time.time()
-        n_in = docs_df.count()
-        docs = self._resume(spark, docs_df, "corpus", "doc_id")
+        # the resumed doc_ids are observed above the resume join, so the
+        # n_todo count also gives n_in: no count pass of the input batch
+        resumed = Observation()
+        docs = self._resume(spark, docs_df, "corpus", "doc_id", resumed)
         n_todo = docs.count()
-        n_resumed = n_in - n_todo
+        n_resumed = resumed.get["n"]
+        n_in = n_todo + n_resumed
         # incremental exact dedup vs the committed hash index: a document
         # whose text already lives in the corpus is dropped pre-verdict
         # (one keyed left-anti join on md5 — hash-pruned, AQE-planned)

@@ -1,8 +1,7 @@
 """The ``ocrd-nmalign-merge`` production flow over METS workspaces, end to
 end on Spark: METS scan -> zip_input_files pairing -> distributed file
-reads -> PAGE-XML / plaintext extraction -> alignment of the two line tables
-(``align_cogrouped``) -> PAGE-XML merge-back -> workspace export with an
-updated METS.
+reads -> one per-page kernel (PAGE-XML / plaintext extraction, alignment,
+PAGE-XML merge-back) -> workspace export with an updated METS.
 
 Reference surface: /root/reference/nmalign/ocrd/cli.py (the processor's
 ``process_workspace``/``process_page_file``).  A user of the reference
@@ -15,14 +14,20 @@ conftest.py:79).  Pages are keyed ``<workspace>#<page_id>`` throughout, so
 page ids repeated across workspaces (universal in OCR-D corpora:
 PHYS_0001 everywhere) never collide.
 
-Scale shape: two narrow ``mapInPandas`` parses (METS, PAGE) + one
-``binaryFile`` scan joined by (workspace, href) + one grouped sort for
-multi-file plaintext partners + the streaming align kernel + the merge
-kernel.  The align kernel's shuffle is a url repartition into one partition
-per core; the other shuffles (pairing aggregation, href join, merge-back
-grouping) sit on near-uniform keys and are left to AQE.  The per-workspace
-METS rewrite at export is a tiny serial commit per workspace (the METS is
-one shared XML document — same split as the reference's METS server).
+Scale shape: ONE Python pass per page.  The METS parse (a narrow
+``mapInPandas``) runs once per call, into a ``localCheckpoint`` that the
+duplicate check, the pairing and the page plan all read.  The files each
+paired page reads (its PAGE file and its partners, hrefs as METS lists
+them) are joined to the ``binaryFile`` blobs once in the JVM, repartitioned
+by url into one partition per core (``align._kernel_partitions``) and
+collected per url without a second exchange; one ``mapInPandas`` then
+parses, aligns (``align_lists_rows``) and merges each page.  Every Arrow
+Python task costs a fixed executor-time toll above this flow's kernel work
+(PLANS.md §5e′), so no step of it is a Python stage of its own.  The
+pairing shuffles sit on near-uniform keys and are left to AQE.  The
+per-workspace METS rewrite at export is a tiny serial commit per workspace
+(the METS is one shared XML document — same split as the reference's METS
+server).
 """
 
 from __future__ import annotations
@@ -32,11 +37,12 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
-from ..operators.align import align_cogrouped
-from ..sinks.pagexml_merge import merge_pages_df
-from ..sources.mets import (MIMETYPE_PAGE, mets_files_df, mets_workspaces_df,
-                            zip_workspace_files)
-from ..sources.pagexml import parse_page_lines, pagexml_segments_df
+from ..operators.align import _kernel_partitions, align_lists_rows
+from ..sinks.pagexml_merge import merge_page_xml
+from ..sources.mets import (MIMETYPE_PAGE, _side_files, mets_files_df,
+                            mets_workspaces_df, zip_workspace_files)
+from ..sources.pagexml import parse_page_lines
+from ..sources.segments import nonempty_lines
 
 __all__ = ["align_workspace", "align_workspaces", "export_workspace",
            "export_workspaces"]
@@ -81,76 +87,85 @@ def _corpus_frames(spark, root: str):
     return ws, blobs
 
 
+def _merge_kernel(other_grp, normalization, cutoff, try_subseg):
+    """Per page (url, workspace, files): parse its PAGE file (role 0), read
+    its partner files (role 1) in sorted-href order (ocrd/cli.py:209-215:
+    the concatenated lines of the sorted plaintext files; a PAGE partner is
+    the page's only partner, and its lines keep their real ids), drop the
+    empty partner lines, align, merge back -> (url, xml, page_file)."""
+    import pandas as pd
+
+    def merge(url, ws, files):
+        files = sorted(files, key=lambda f: (f["role"], f["href"]))
+        for f in files:
+            # a file listed in METS but missing on disk fails like the
+            # reference's open() (ocrd/cli.py:211-212), never drops the
+            # page or shifts the partner line numbering
+            if f["content"] is None:
+                raise FileNotFoundError(
+                    f"{'partner ' if f['role'] else ''}file in METS missing "
+                    f"on disk: {ws}/{f['href']} (page {url})")
+        lines, ids = [], {}
+        for f in files[1:]:
+            if f["mimetype"] == MIMETYPE_PAGE:
+                for lid, text, _conf in parse_page_lines(f["content"]):
+                    ids[len(lines)] = lid
+                    lines.append(text)
+            else:
+                lines += bytes(f["content"]).decode(
+                    "utf-8", "replace").splitlines()
+        l2, nos = nonempty_lines(lines, range(len(lines)))
+        page = files[0]["content"]
+        rows = align_lists_rows(url, [t for _, t, _ in parse_page_lines(page)],
+                                l2, nos, normalization, cutoff, try_subseg)
+        # a matched j's other line id: the partner's real id, else line%04d
+        # of its ORIGINAL line number (as merge_pages_df)
+        xml = merge_page_xml(
+            page, [r[1:7] + (r[8],) for r in rows], other_grp,
+            line_id_of=lambda j: ids.get(nos[j]) or f"line{nos[j]:04d}")
+        return url, xml, files[0]["file_id"]
+
+    def kernel(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [merge(*r) for r in zip(pdf["url"], pdf["workspace"],
+                                        pdf["files"])],
+                columns=["url", "xml", "page_file"])
+    return kernel
+
+
 def _align(ws, blobs, input_grp: str, other_grp: str, normalization=None,
            cutoff=None, try_subseg: bool = True):
     """Core flow over (workspace, mets) + (workspace, href, content)."""
-    pairs = zip_workspace_files(mets_files_df(ws), input_grp, other_grp)
-    url = F.concat_ws(_SEP, "workspace", "page_id")
+    # the one METS parse of the call: the duplicate check, the pairing and
+    # the page plan below all read this checkpoint
+    files = mets_files_df(ws).localCheckpoint(eager=True)
+    pairs = zip_workspace_files(files, input_grp, other_grp)
 
-    # left join + loud failure: a file listed in METS but missing on disk
-    # must fail like the reference's open() would (ocrd/cli.py:211-212),
-    # not silently drop the page or shift the partner line numbering
-    missing_msg = F.concat(F.lit("file in METS missing on disk: "),
-                           F.col("workspace"), F.lit("/"), F.col("href"))
-    page_xml = (pairs
-                .select("workspace", url.alias("url"), "page_file",
-                        F.col("page_href").alias("href"),
-                        "other_is_page", "other_hrefs")
-                .join(blobs, ["workspace", "href"], "left")
-                .withColumn("xml", F.when(
-                    F.col("content").isNull(),
-                    F.raise_error(missing_msg).cast("binary"))
-                    .otherwise(F.col("content")))
-                .drop("content"))
-
-    cand = pagexml_segments_df(page_xml, side=1) \
-        .select("url", "seq_no", "seg_text")
-
-    # other side: one row per partner file, in sorted-href order (k), then
-    # a per-page pass enumerates lines across files (ocrd/cli.py:209-215:
-    # concatenated splitlines of the sorted plaintext files; PAGE partners
-    # go through the reference extraction order instead)
-    other_files = (pairs
-                   .select("workspace", url.alias("url"), "other_is_page",
-                           F.posexplode(F.split("other_hrefs", ","))
-                           .alias("k", "href"))
-                   .join(blobs, ["workspace", "href"], "left"))
-
-    def extract(key, pdf):
-        import pandas as pd
-        u = key[0]
-        rows = []
-        seq = 0
-        for _, r in pdf.sort_values("k").iterrows():
-            if r["content"] is None:
-                raise FileNotFoundError(
-                    f"partner file in METS missing on disk: "
-                    f"{r['workspace']}/{r['href']} (page {u})")
-            if r["other_is_page"]:
-                for lid, text, _conf in parse_page_lines(r["content"]):
-                    rows.append((u, seq, text, lid))
-                    seq += 1
-            else:
-                for line in bytes(r["content"]).decode(
-                        "utf-8", "replace").splitlines():
-                    rows.append((u, seq, line, None))
-                    seq += 1
-        return pd.DataFrame(rows, columns=["url", "seq_no", "seg_text",
-                                           "line_id"])
-
-    refs = other_files.groupBy("url").applyInPandas(
-        extract, schema="url string, seq_no int, seg_text string, "
-                        "line_id string")
-
-    aligned = align_cogrouped(cand, refs.select("url", "seq_no", "seg_text"),
-                              normalization=normalization, cutoff=cutoff,
-                              try_subseg=try_subseg)
-    merged = merge_pages_df(
-        page_xml.select("url", "xml"), aligned,
-        other_grp=other_grp,
-        ref_ids_df=refs.where(F.col("line_id").isNotNull())
-        .select("url", "seq_no", "line_id"))
-    return merged.join(page_xml.select("url", "page_file"), "url"), pairs
+    # one row per file a paired page reads, its PAGE file (role 0) and its
+    # partner files (role 1), hrefs as METS lists them (an href may hold a
+    # comma, so never split the joined ``other_hrefs``), joined to the
+    # blobs once
+    def side(grp, role):
+        return _side_files(files, grp, page_only=role == 0).select(
+            "workspace", "page_id", F.lit(role).alias("role"), "href",
+            "file_id", "mimetype")
+    reads = (side(input_grp, 0).unionByName(side(other_grp, 1))
+             .join(pairs.select("workspace", "page_id"),
+                   ["workspace", "page_id"], "left_semi")
+             .join(blobs, ["workspace", "href"], "left")
+             .withColumn("url", F.concat_ws(_SEP, "workspace", "page_id")))
+    # the url repartition is the one exchange in front of the kernel: the
+    # groupBy's keys follow from url, so it keeps that layout
+    per_page = (reads.repartition(_kernel_partitions(reads), "url")
+                .groupBy("url", "workspace")
+                .agg(F.collect_list(F.struct("role", "href", "file_id",
+                                             "mimetype", "content"))
+                     .alias("files")))
+    merged = per_page.mapInPandas(
+        _merge_kernel(other_grp, normalization, cutoff, try_subseg),
+        schema="url string, xml binary, page_file string")
+    return merged, pairs
 
 
 def align_workspace(spark, workspace_dir: str, input_grp: str,

@@ -149,6 +149,37 @@ def test_rules_tally_the_judged_batch_on_a_later_run(spark, sf_small,
         assert stats["n_kept"] + row.n_dropped == row.n_judged
 
 
+def test_later_run_counts_the_batch_twice(spark, sf_small, tmp_path,
+                                          monkeypatch):
+    """A run into an output with committed ``_hashes`` makes two count
+    passes, after the resume join and after the hash drop: the resumed
+    doc_ids are observed on the first of them, and ``n_in`` is their sum.
+    An empty later batch reads zeros, also with a shuffled resume join."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    first = CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 0))
+    cls, calls = type(docs), []
+    count = cls.count
+
+    def counting(self):
+        calls.append(1)
+        return count(self)
+
+    monkeypatch.setattr(cls, "count", counting)
+    stats = CurationPipeline(out).run(spark, docs)
+    assert len(calls) == 2
+    monkeypatch.setattr(cls, "count", count)
+    assert stats["n_in"] == docs.count()
+    assert stats["n_resumed"] == first["n_kept"]
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        empty = CurationPipeline(out).run(spark, docs.where(F.lit(False)))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert (empty["n_in"], empty["n_resumed"], empty["n_kept"]) == (0, 0, 0)
+
+
 class Killed(Exception):
     pass
 

@@ -199,3 +199,32 @@ def test_pipeline_kernel_exchanges_one_partition_per_core(spark, sf_small,
     assert "hashpartitioning(page_uid#" in plan
     counts = _repartition_counts(plan)
     assert counts and set(counts) == {n}
+
+
+def test_workspace_merge_is_one_python_pass_per_page(spark, tmp_path):
+    """``align_workspaces``' merged frame runs ONE Python node, the per-page
+    parse/align/merge kernel: no grouped-map node, no second METS parse
+    (the plan reads the METS checkpoint), and its one pinned exchange, the
+    url repartition, has one partition per core."""
+    from nmalign_spark.plans.workspace import align_workspaces
+    from nmalign_spark.sources.mets import MIMETYPE_PAGE, make_mets_xml
+    from nmalign_spark.sources.pagexml import make_page_xml
+
+    for name in ("ws1", "ws2"):
+        ws = tmp_path / name
+        (ws / "OCR").mkdir(parents=True)
+        (ws / "GT").mkdir()
+        (ws / "OCR" / "PA.xml").write_text(make_page_xml(["alpha beta"]))
+        (ws / "GT" / "PA.txt").write_text("alpha beta\n")
+        (ws / "mets.xml").write_text(make_mets_xml([("PA", [
+            ("OCR", "O_PA", MIMETYPE_PAGE, "OCR/PA.xml"),
+            ("GT", "G_PA", "text/plain", "GT/PA.txt")])]))
+    merged, _ = align_workspaces(spark, str(tmp_path), "OCR", "GT")
+    assert len(merged.collect()) == 2
+    plan = _plan(merged).split("== Initial Plan ==")[0]
+    assert plan.count("MapInPandas") == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "EvalPython" not in plan
+    assert "ExistingRDD" in plan
+    n = spark.sparkContext.defaultParallelism
+    assert set(_repartition_counts(plan)) == {n}

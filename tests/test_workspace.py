@@ -186,3 +186,120 @@ def test_missing_page_file_fails_loudly(spark, tmp_path):
                                 normalization=NORM, try_subseg=False)
     with pytest.raises(Exception, match="missing on disk"):
         merged.collect()
+
+
+def test_partner_href_with_a_comma(spark, tmp_path):
+    """A partner href holding a comma is one file, read by its full name
+    (the reference opens it by name), not split at the comma."""
+    ws = tmp_path / "ws"
+    (ws / "OCR").mkdir(parents=True)
+    (ws / "GT").mkdir()
+    (ws / "OCR" / "PA.xml").write_text(make_page_xml(noisy(GT)))
+    (ws / "GT" / "PA,1.txt").write_text("\n".join(GT) + "\n")
+    (ws / "mets.xml").write_text(make_mets_xml([("PA", [
+        ("OCR", "O_PA", MIMETYPE_PAGE, "OCR/PA.xml"),
+        ("GT", "G_PA", TXT, "GT/PA,1.txt")])]))
+    merged, _ = align_workspace(spark, str(ws), "OCR", "GT",
+                                normalization=NORM, try_subseg=False)
+    assert export_workspace(merged, str(ws), "OUT") == 1
+    out = (ws / "OUT" / "OUT_PA.xml").read_bytes()
+    assert [t for _, t, _ in parse_page_lines(out)] == GT
+
+
+def _edge_workspace(tmp_path):
+    """One page per partner shape the fused kernel must read like the
+    operator composition: (page_id, OCR xml, [(file_id, mimetype, href,
+    text)] in METS order)."""
+    no_lines = make_page_xml([]).replace('<TextRegion id="r0"></TextRegion>',
+                                         "")
+    assert parse_page_lines(no_lines) == []
+    blank = ["Was ist Aufklärung?", "", "   ", "Der Ausgang des Menschen",
+             "\t", "aus seiner selbst verschuldeten Unmündigkeit"]
+    pages = [
+        ("P1", make_page_xml(["the quickk brown fox junps",
+                              "ovre the lazy sleping dog",
+                              "an unrelated trailing line here"]),
+         [("G_P1", TXT, "GT/P1.txt",
+           "the quick brown fox jumps over the lazy sleeping dog\n"
+           "an unrelated trailing line here\n")]),
+        ("P2", make_page_xml(noisy(GT)),
+         [("G_P2b", TXT, "GT/P2_b.txt", GT[2] + "\n"),
+          ("G_P2a", TXT, "GT/P2_a.txt", "\n".join(GT[:2]) + "\n")]),
+        ("P3", make_page_xml(noisy(GT), nested=True),
+         [("G_P3", MIMETYPE_PAGE, "GT/P3.xml", make_page_xml(GT))]),
+        ("P4", make_page_xml(noisy(GT)),
+         [("G_P4", TXT, "GT/P4.txt", "\n".join(blank) + "\n")]),
+        ("P5", make_page_xml(noisy(GT), region_fallback=True),
+         [("G_P5", TXT, "GT/P5.txt", "\n".join(GT) + "\n")]),
+        ("P6", no_lines,
+         [("G_P6", TXT, "GT/P6.txt", "\n".join(GT) + "\n")]),
+    ]
+    ws = tmp_path / "edge"
+    (ws / "OCR").mkdir(parents=True)
+    (ws / "GT").mkdir()
+    mets = []
+    for pid, ocr, partners in pages:
+        (ws / "OCR" / f"{pid}.xml").write_text(ocr)
+        fs = [("OCR", f"O_{pid}", MIMETYPE_PAGE, f"OCR/{pid}.xml")]
+        for fid, mime, href, text in partners:
+            (ws / href).write_text(text)
+            fs.append(("GT", fid, mime, href))
+        mets.append((pid, fs))
+    (ws / "mets.xml").write_text(make_mets_xml(mets))
+    return ws, pages
+
+
+def test_fused_merge_equals_the_operator_composition(spark, tmp_path):
+    """The one-kernel flow writes, per url, the bytes of the operator
+    composition it replaces: PAGE segments + partner lines in sorted-href
+    order -> ``align_cogrouped`` -> ``merge_pages_df`` with the partner's
+    real line ids."""
+    from pyspark.sql import functions as F
+
+    from nmalign_spark.operators.align import align_cogrouped
+    from nmalign_spark.sinks.pagexml_merge import merge_pages_df
+    from nmalign_spark.sources.pagexml import pagexml_segments_df
+
+    ws, pages = _edge_workspace(tmp_path)
+    key = str(ws.resolve()) + "#"
+    page_xml = spark.createDataFrame(
+        [(key + pid, ocr.encode()) for pid, ocr, _ in pages],
+        "url string, xml binary")
+    refs = []
+    for pid, _, partners in pages:
+        seq = 0
+        for _, mime, _, text in sorted(partners, key=lambda f: f[2]):
+            lines = ([(lid, t) for lid, t, _ in parse_page_lines(text)]
+                     if mime == MIMETYPE_PAGE else
+                     [(None, t) for t in text.splitlines()])
+            for lid, t in lines:
+                refs.append((key + pid, seq, t, lid))
+                seq += 1
+    refs = spark.createDataFrame(
+        refs, "url string, seq_no int, seg_text string, line_id string")
+    cand = pagexml_segments_df(page_xml, side=1).select("url", "seq_no",
+                                                        "seg_text")
+    aligned = align_cogrouped(cand, refs.select("url", "seq_no", "seg_text"),
+                              normalization=NORM, try_subseg=True)
+    want = merge_pages_df(page_xml, aligned, other_grp="GT",
+                          ref_ids_df=refs.where(F.col("line_id").isNotNull())
+                          .select("url", "seq_no", "line_id"))
+
+    merged, _ = align_workspace(spark, str(ws), "OCR", "GT",
+                                normalization=NORM, try_subseg=True)
+    got = {r.url: (bytes(r.xml), r.page_file) for r in merged.collect()}
+    assert {u: x for u, (x, _) in got.items()} == \
+        {r.url: bytes(r.xml) for r in want.collect()}
+    assert {u: f for u, (_, f) in got.items()} == \
+        {key + pid: f"O_{pid}" for pid, _, _ in pages}
+    # the fixture reaches every branch: sub-segments of one partner line,
+    # matched lines with real ids and with filtered line numbers, the region
+    # fallback (pseudo-lines align, but there is no TextLine to merge into),
+    # an empty page
+    equivs = {u[len(key):]: parse_line_equivs(x) for u, (x, _) in got.items()}
+    assert any(d == "GT/l0001" for *_, d in equivs["P3"])
+    assert {d for *_, d in equivs["P4"] if d} == {
+        "GT/line0000", "GT/line0003", "GT/line0005"}
+    assert [d for *_, d in equivs["P1"] if d] == [
+        "GT/line0000[0:25]", "GT/line0000[26:51]", "GT/line0001"]
+    assert equivs["P5"] == equivs["P6"] == []
