@@ -63,20 +63,18 @@ def _q_align_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_queries_oracle.py::test_gate_window_integrity pins that the
 # first-50 window contains all of groups (1)+(2).
 _GATE_PRIORITY = [
-    # (1) keys whose code changed in round 7: training_split (its kept-id
-    # manifest is a local checkpoint instead of a temp-directory parquet
-    # table) —
-    "training_split",
-    # and in round 6: one alignment core (the
-    # cogroup kernel, the salted assembler's row loop and the copied
-    # empty-line filters folded into align_lists_rows/nonempty_lines; one
-    # partition per core for every align-kernel shuffle) — every query
-    # built on align_pages, align_segments, align_cogrouped or the salted
-    # path
+    # (1) keys whose code changed this round: every alignment scores its
+    # similarity matrix in one flat multi-word Myers pass (kernel/myers.py;
+    # no page leaves the batched pass, and the dense per-document call is
+    # the same pass) — every query built on align_pages, align_segments,
+    # align_cogrouped, the salted path or match() —
     "u1_align_pages", "u1_align_segments", "u1_align_salted",
     "u1_align_identity", "u1_align_noisy", "s7_mets_workspace",
     "k2_pagexml_merge", "k3_page_metrics", "k3_corpus_metrics",
     "a4_assemble_pages", "a5_unmatched_lines",
+    # and in the round before: training_split (its kept-id manifest is a
+    # local checkpoint instead of a temp-directory parquet table)
+    "training_split",
     # (2) the 33 keys the r5 driver window did not sample
     "dedup_span_removal", "dedup_lines", "st_boilerplate_gate", "sim_lsh_topk",
     "sim_ivf_topk", "sim_ivf_lloyd_topk", "sim_cosine_dups",

@@ -15,13 +15,15 @@ contract (uniform-cost Levenshtein; Indel = LCS-based distance; partial_ratio
 = best Indel window of the shorter string inside the longer) — no code is
 copied from any engine.
 
-Design notes (scale): the hot call is :func:`cdist_levenshtein` computing the
-full N×M similarity matrix of one document's line lists inside an Arrow
-batch.  The DP is vectorized with NumPy over a 3-D tensor
-``(N queries × M choices × max-choice-length)`` so the Python-level loop runs
-only ``max(len(query))`` times per document instead of ``N·M·len`` times.
-The horizontal DP dependency (``D[i][j] = min(..., D[i][j-1]+1)``) is solved
-in closed form with a cumulative minimum::
+Design notes (scale): the hot call is the similarity matrix of every
+document's line lists inside an Arrow batch, :func:`cdist_levenshtein_many`.
+It runs on the bit-parallel Myers kernel (kernel/myers.py): one flat pass
+over every (query, choice) pair of the batch, whatever the line lengths.
+The dense DP over a 3-D tensor ``(N queries × M choices × max-choice-length)``
+(:func:`_batched_dp`) serves only the Indel windows of the
+partial-ratio fallback for needles over 64 chars.  Its horizontal DP
+dependency (``D[i][j] = min(..., D[i][j-1]+1)``) is solved in closed form
+with a cumulative minimum::
 
     D[i][j] = j + cummin_k<=j ( E[k] - k )   where E = vertical/diagonal min
 
@@ -237,8 +239,11 @@ def cdist_levenshtein_many(doc_pairs: list[tuple[list[str], list[str]]],
     All documents' (query, choice) pairs are scored in ONE flat bit-parallel
     pass (kernel/myers.py ``myers_cdist_many``; north_star: "the
     similarity-matrix stage batched across documents") — identical values to
-    per-document calls, ~5x faster on Arrow-batch-sized inputs because the
-    per-document NumPy dispatch overhead amortizes."""
+    per-document calls.  On the 999 ordinary pages of a generated benchmark
+    batch (perfbench seed 961, Arrow batches of 200 pages, 4-vCPU host, 5
+    runs) its Myers pass takes a median of 0.60 CPU-s against 6.4 CPU-s for
+    one ``myers_cdist`` call per page, because the per-document NumPy
+    dispatch amortizes over the batch."""
     if processor is not None:
         doc_pairs = [([processor(s) for s in qs], [processor(s) for s in cs])
                      for qs, cs in doc_pairs]

@@ -1,18 +1,30 @@
 """Bit-parallel Levenshtein distance (Myers 1999), batch-vectorized.
 
-This is the 100 TB hot path: the reference computes a full N×M matrix of
-Levenshtein distances per document (``cdist`` at
-/root/reference/nmalign/lib/align.py:60-61, delegated to SIMD C++ — see
-README.md:367-371).  Here the same work is done with Myers' O(⌈|a|/64⌉·|b|)
-bit-parallel recurrence, vectorized with NumPy across *all* (query, choice)
-pairs of a document at once:
+This is the hot path of alignment: the reference computes a full N×M
+matrix of Levenshtein distances per document (``cdist`` at align.py:60-61
+of bertsky/nmalign, delegated to SIMD C++).  Here the same work is done
+with Myers' O(⌈|a|/64⌉·|b|) bit-parallel recurrence, vectorized with NumPy.
+Every caller goes through one flat pass, :func:`myers_cdist_many`:
 
-* state is ``(N, M, W)`` uint64 (W = words per query), so the Python loop
-  runs only ``max(len(choice))`` times per document;
-* per-query pattern-bitmask tables are indexed per column with one fancy
-  index, keeping every op inside NumPy's C loops;
-* multi-word carries (addition, shifts) are propagated explicitly, so
-  arbitrarily long lines work (W grows as needed).
+* it scores *every* (query, choice) pair of a whole Arrow batch at once,
+  whatever the line lengths, so no document leaves the batched pass;
+* pairs are bucketed by the query's word count ``W = ceil(len/64)``; each
+  bucket keeps ``(W, P)`` uint64 state and runs one Python loop over
+  choice columns;
+* a bucket's pairs are sorted by choice length, longest first, so the
+  pairs still live at a column are a prefix of the state and a finished
+  pair leaves the loop without a gather;
+* choices are held as one concatenated vocabulary-index vector plus
+  per-choice offsets, never padded to the batch's longest choice;
+* each document has its own vocabulary of query chars, so a query's
+  bitmask row is as wide as its document's alphabet, not the batch's.
+
+:func:`myers_cdist`, the dense single-document call (the giant's chunks on
+the salted path, ``match()`` without an injected matrix), is that pass
+over one document.
+
+Multi-word carries (the addition, the shifts) are propagated explicitly
+per Hyyrö's blocks, so arbitrarily long lines work.
 
 The algorithm is public (G. Myers, "A fast bit-vector algorithm for
 approximate string matching based on dynamic programming", JACM 46(3), 1999;
@@ -28,27 +40,13 @@ __all__ = ["myers_cdist", "myers_cdist_many"]
 
 _ONE = np.uint64(1)
 _SIX3 = np.uint64(63)
+_FULL = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 
 def myers_cdist(queries: list[str], choices: list[str]) -> np.ndarray:
-    """Exact Levenshtein distance matrix (N, M) int32 for two string lists.
-
-    Queries are bucketed by word count ``W = ceil(len/64)`` so short lines
-    (the common case) take the single-word fast path instead of paying the
-    multi-word carry loop of the longest outlier line.
-    """
-    n, m = len(queries), len(choices)
-    out = np.empty((n, m), dtype=np.int32)
-    if n == 0 or m == 0:
-        return out
-    ws = np.fromiter(((len(s) + 63) // 64 for s in queries), dtype=np.int64, count=n)
-    buckets = np.unique(ws)
-    if len(buckets) > 1:
-        for w in buckets:
-            sel = np.flatnonzero(ws == w)
-            out[sel, :] = _myers_cdist_group([queries[i] for i in sel], choices)
-        return out
-    return _myers_cdist_group(queries, choices)
+    """Exact Levenshtein distance matrix (N, M) int32 for two string lists:
+    the flat pass of :func:`myers_cdist_many` over one document."""
+    return myers_cdist_many([(queries, choices)])[0]
 
 
 def myers_cdist_many(doc_pairs: list[tuple[list[str], list[str]]]
@@ -57,258 +55,185 @@ def myers_cdist_many(doc_pairs: list[tuple[list[str], list[str]]]
 
     The per-document matrices are tiny (tens of rows), so per-document
     NumPy calls are overhead-bound; this flattens every intra-document
-    (query, choice) pair of the whole batch into ONE vector of Myers states
-    (north_star: "the similarity-matrix stage batched across documents to
-    keep executors saturated").  Documents whose longest query exceeds 64
-    chars fall back to the per-document multi-word path.
+    (query, choice) pair of the whole batch, of every line length, into
+    one flat pass (north_star: "the similarity-matrix stage batched across
+    documents to keep executors saturated").  The choices of the batch are
+    stored as one concatenated vocabulary-index vector plus per-choice
+    offsets, so a single long reference line costs its own length, not
+    the batch's choice count times its length.
 
-    Returns exact uniform-cost Levenshtein matrices, identical to
-    ``myers_cdist`` per document (asserted by tests/test_kernel_myers.py).
+    Returns exact uniform-cost Levenshtein matrices (asserted against the
+    scalar DP oracle by tests/test_kernel_myers.py).
     """
-    out: list[np.ndarray | None] = [None] * len(doc_pairs)
-    flat_docs: list[int] = []
-    for d, (qs, cs) in enumerate(doc_pairs):
-        if not qs or not cs or max(map(len, qs)) > 64:
-            out[d] = myers_cdist(qs, cs)
-        else:
-            flat_docs.append(d)
-    if not flat_docs:
-        return [m for m in out]  # type: ignore[misc]
-
-    # build the flat pair index: pair p = (query q_global, choice c_global)
-    q_texts: list[str] = []
-    c_texts: list[str] = []
-    pair_q: list[np.ndarray] = []
-    pair_c: list[np.ndarray] = []
-    shapes: list[tuple[int, int]] = []
-    for d in flat_docs:
-        qs, cs = doc_pairs[d]
-        q0, c0 = len(q_texts), len(c_texts)
-        q_texts.extend(qs)
-        c_texts.extend(cs)
-        nq, nc = len(qs), len(cs)
-        gq, gc = np.meshgrid(np.arange(q0, q0 + nq),
-                             np.arange(c0, c0 + nc), indexing="ij")
-        pair_q.append(gq.ravel())
-        pair_c.append(gc.ravel())
-        shapes.append((nq, nc))
-    pq = np.concatenate(pair_q)
-    pc = np.concatenate(pair_c)
-
-    dists = _myers_flat(q_texts, c_texts, pq, pc)
+    out = [np.empty((len(qs), len(cs)), dtype=np.int32)
+           for qs, cs in doc_pairs]
+    scored = [d for d, (qs, cs) in enumerate(doc_pairs) if qs and cs]
+    if not scored:
+        return out
+    dists = _myers_flat([q for d in scored for q in doc_pairs[d][0]],
+                        [c for d in scored for c in doc_pairs[d][1]],
+                        np.array([out[d].shape for d in scored]))
     off = 0
-    for d, (nq, nc) in zip(flat_docs, shapes):
-        cnt = nq * nc
-        out[d] = dists[off:off + cnt].reshape(nq, nc)
-        off += cnt
-    return [m for m in out]  # type: ignore[misc]
+    for d in scored:
+        out[d][:] = dists[off:off + out[d].size].reshape(out[d].shape)
+        off += out[d].size
+    return out
+
+
+def _codes(texts: list[str]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Code points of all ``texts`` concatenated, each text's offset into
+    them, and its length."""
+    lens = np.fromiter(map(len, texts), dtype=np.int64, count=len(texts))
+    offs = np.zeros(len(texts), dtype=np.int64)
+    np.cumsum(lens[:-1], out=offs[1:])
+    codes = np.frombuffer("".join(texts).encode("utf-32-le"), dtype=np.uint32)
+    return codes, offs, lens
+
+
+def _tables(q_texts: list[str], c_texts: list[str],
+            nq: np.ndarray, nc: np.ndarray) -> tuple[tuple, tuple]:
+    """The query and choice tables of the flat pass, with one vocabulary
+    per document (``nq[d]`` queries and ``nc[d]`` choices each).
+
+    Returns ``(la, q_off, q_idx, q_width)`` and ``(lb, c_off, c_idx)``:
+    lengths, offsets into the concatenated chars, each char's index in its
+    document's vocabulary of query chars, and per query the width of its
+    bitmask row, that vocabulary's size plus one.  A choice char that no
+    query of its document has gets that last slot.  Rows as wide as the
+    document's vocabulary, not the batch's, keep the bitmask table small
+    when a batch mixes scripts."""
+    q_codes, q_off, la = _codes(q_texts)
+    c_codes, c_off, lb = _codes(c_texts)
+    docs = np.arange(len(nq))
+    # (document, code point) keys; code points are < 2**21
+    q_key = np.repeat(np.repeat(docs, nq), la)
+    q_key <<= 21
+    q_key |= q_codes
+    vocab, q_idx = np.unique(q_key, return_inverse=True)
+    v0 = np.searchsorted(vocab, docs << 21)     # each document's first key
+    vn = np.diff(np.append(v0, len(vocab)))
+    q_idx -= v0[q_key >> 21]
+    c_doc = np.repeat(np.repeat(docs, nc), lb)
+    c_key = c_doc << 21
+    c_key |= c_codes
+    c_idx = vn[c_doc]
+    if len(vocab):
+        rank = np.minimum(np.searchsorted(vocab, c_key), len(vocab) - 1)
+        hit = vocab[rank] == c_key
+        c_idx[hit] = rank[hit] - v0[c_doc[hit]]
+    return (la, q_off, q_idx, np.repeat(vn + 1, nq)), (lb, c_off, c_idx)
 
 
 def _myers_flat(q_texts: list[str], c_texts: list[str],
-                pq: np.ndarray, pc: np.ndarray) -> np.ndarray:
-    """Single-word Myers over a flat pair vector.  All queries <= 64 chars.
-
-    State is (P,) uint64 per register — every step is one C-loop over all
-    pairs of all documents in the batch."""
-    nq = len(q_texts)
-    la = np.fromiter((len(s) for s in q_texts), dtype=np.int64, count=nq)
-    mb = len(c_texts)
-    lb = np.fromiter((len(s) for s in c_texts), dtype=np.int64, count=mb)
-    # vocab over all query chars
-    q_enc = [np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-             for s in q_texts]
-    all_q = np.concatenate([e for e in q_enc if e.size] or
-                           [np.empty(0, dtype=np.uint32)])
-    vocab = np.unique(all_q)
-    V = len(vocab)
-    # peq: (nq, V+1) single-word bitmasks, built with one ufunc.at
-    peq = np.zeros((nq, V + 1), dtype=np.uint64)
-    if V:
-        qi_all = np.concatenate([np.full(e.size, i, dtype=np.int64)
-                                 for i, e in enumerate(q_enc) if e.size] or
-                                [np.empty(0, dtype=np.int64)])
-        pos_all = np.concatenate([np.arange(e.size, dtype=np.uint64)
-                                  for e in q_enc if e.size] or
-                                 [np.empty(0, dtype=np.uint64)])
-        vidx_all = np.searchsorted(vocab, all_q)
-        np.bitwise_or.at(peq, (qi_all, vidx_all), _ONE << pos_all)
-    # choices padded + mapped to vocab indices
-    lb_max = int(lb.max()) if mb else 0
-    B = np.zeros((mb, max(lb_max, 1)), dtype=np.uint32)
-    for k, s in enumerate(c_texts):
-        if s:
-            B[k, : len(s)] = np.frombuffer(s.encode("utf-32-le"),
-                                           dtype=np.uint32)
-    if V:
-        bidx = np.searchsorted(vocab, B)
-        np.clip(bidx, 0, V - 1, out=bidx)
-        bidx[vocab[bidx] != B] = V
-    else:
-        bidx = np.full(B.shape, V, dtype=np.int64)
-
-    P = pq.size
-    dist = np.empty(P, dtype=np.int32)
-    la_p = la[pq]
-    lb_p = lb[pc]
-    # trivial pairs resolved upfront; loop skips them via the live mask
-    triv = (la_p == 0) | (lb_p == 0)
-    dist[la_p == 0] = lb_p[la_p == 0]
-    dist[lb_p == 0] = la_p[lb_p == 0]
-
-    hb = _ONE << ((np.maximum(la_p - 1, 0).astype(np.uint64)) & _SIX3)
-    full = np.uint64(0xFFFFFFFFFFFFFFFF)
-    pv = np.full(P, full, dtype=np.uint64)
-    mv = np.zeros(P, dtype=np.uint64)
-    score = la_p.astype(np.int32).copy()
-    nzero = np.uint64(0)
-    live = ~triv
-    # iterate to each pair's choice length; capture when done
-    for j in range(lb_max):
-        if not live.any():
-            break
-        lp = np.flatnonzero(live)
-        eq = peq[pq[lp], bidx[pc[lp], j]]
-        pvl = pv[lp]
-        mvl = mv[lp]
-        x = eq & pvl
-        xh = ((x + pvl) ^ pvl) | eq
-        ph = mvl | ~(xh | pvl)
-        mh = pvl & xh
-        score[lp] += ((ph & hb[lp]) != nzero).astype(np.int32)
-        score[lp] -= ((mh & hb[lp]) != nzero).astype(np.int32)
-        ph = (ph << _ONE) | _ONE
-        mh = mh << _ONE
-        xv = eq | mvl
-        pv[lp] = mh | ~(xv | ph)
-        mv[lp] = ph & xv
-        fin = lp[lb_p[lp] == (j + 1)]
-        if fin.size:
-            dist[fin] = score[fin]
-            live[fin] = False
-    return dist
-
-
-def _myers_cdist_group(queries: list[str], choices: list[str]) -> np.ndarray:
-    n, m = len(queries), len(choices)
-    out = np.empty((n, m), dtype=np.int32)
-    q_enc = [np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32) for s in queries]
-    la = np.fromiter((len(s) for s in queries), dtype=np.int64, count=n)
-    lb = np.fromiter((len(s) for s in choices), dtype=np.int64, count=m)
-    la_max = int(la.max())
-    lb_max = int(lb.max())
-    # trivial edges
-    if la_max == 0:
-        out[:] = lb[None, :]
-        return out
-    # pad/encode choices: (M, Lb) uint32
-    B = np.zeros((m, max(lb_max, 1)), dtype=np.uint32)
-    for k, s in enumerate(choices):
-        if s:
-            B[k, : len(s)] = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-
-    W = (la_max + 63) // 64
-    # global vocab over all query characters; index V == "not in any query"
-    vocab = np.unique(np.concatenate([e for e in q_enc if e.size] or
-                                     [np.empty(0, dtype=np.uint32)]))
-    V = len(vocab)
-    peq = np.zeros((n, V + 1, W), dtype=np.uint64)
-    for qi, enc in enumerate(q_enc):
-        if enc.size == 0:
-            continue
-        vidx = np.searchsorted(vocab, enc)
-        for pos in range(enc.size):
-            peq[qi, vidx[pos], pos >> 6] |= _ONE << np.uint64(pos & 63)
-    # map every choice char to vocab index once (V = "unseen" sentinel row)
-    if V:
-        bidx = np.searchsorted(vocab, B)
-        np.clip(bidx, 0, V - 1, out=bidx)
-        bidx[vocab[bidx] != B] = V
-    else:
-        bidx = np.full(B.shape, V, dtype=np.int64)
-
-    # per-query high-bit mask (score register): bit la-1 of the last word
-    hb_mask = (_ONE << (np.maximum(la - 1, 0).astype(np.uint64) & _SIX3))
-
-    full = np.uint64(0xFFFFFFFFFFFFFFFF)
-    pv = np.full((n, m, W), full, dtype=np.uint64)
-    mv = np.zeros((n, m, W), dtype=np.uint64)
-    score = np.broadcast_to(la[:, None], (n, m)).astype(np.int32).copy()
-
-    # rows with empty query handled upfront
-    empty_q = la == 0
-    if empty_q.any():
-        out[empty_q, :] = lb[None, :].astype(np.int32)
-    # choices of length 0
-    zero_b = lb == 0
-    if zero_b.any():
-        out[:, zero_b] = la[:, None].astype(np.int32)
-
-    qsel = np.arange(n)[:, None]                    # (N, 1) for fancy index
-    hb_m = hb_mask[:, None]                         # (N, 1)
-    nz = np.uint64(0)
-    if W == 1:
-        # single-word fast path (lines <= 64 chars — the common case)
-        peq1 = peq[:, :, 0]
-        pv1 = pv[:, :, 0]
-        mv1 = mv[:, :, 0]
-        for j in range(lb_max):
-            eq = peq1[qsel, bidx[None, :, j]]       # (N, M)
-            x = eq & pv1
-            xh = ((x + pv1) ^ pv1) | eq
-            ph = mv1 | ~(xh | pv1)
-            mh = pv1 & xh
-            score += ((ph & hb_m) != nz).astype(np.int32)
-            score -= ((mh & hb_m) != nz).astype(np.int32)
-            ph = (ph << _ONE) | _ONE
-            mh = mh << _ONE
-            xv = eq | mv1
-            pv1 = mh | ~(xv | ph)
-            mv1 = ph & xv
-            done = lb == (j + 1)
-            if done.any():
-                out[:, done] = score[:, done]
-        if empty_q.any():
-            out[empty_q, :] = lb[None, :].astype(np.int32)
-        if zero_b.any():
-            out[:, zero_b] = la[:, None].astype(np.int32)
-        return out
-    for j in range(lb_max):
-        eq = peq[qsel, bidx[None, :, j], :]         # (N, M, W)
-        # multi-word Xh = (((Eq & PV) + PV) ^ PV) | Eq
-        carry = np.zeros((n, m), dtype=np.uint64)
-        xh = np.empty_like(pv)
-        for w in range(W):
-            x = eq[:, :, w] & pv[:, :, w]
-            t = x + carry
-            c1 = t < x
-            s = t + pv[:, :, w]
-            c2 = s < t
-            xh[:, :, w] = (s ^ pv[:, :, w]) | eq[:, :, w]
-            carry = (c1 | c2).astype(np.uint64)
-        ph = mv | ~(xh | pv)
-        mh = pv & xh
-        # score update — bucketing puts every query's high bit in the last
-        # word (W == ceil(la/64)), so no per-query word gather is needed
-        score += ((ph[:, :, W - 1] & hb_m) != nz).astype(np.int32)
-        score -= ((mh[:, :, W - 1] & hb_m) != nz).astype(np.int32)
-        # shift left across words; Ph gets carry-in 1, Mh carry-in 0
-        ph_sh = np.empty_like(ph)
-        mh_sh = np.empty_like(mh)
-        ph_sh[:, :, 0] = (ph[:, :, 0] << _ONE) | _ONE
-        mh_sh[:, :, 0] = mh[:, :, 0] << _ONE
-        for w in range(1, W):
-            ph_sh[:, :, w] = (ph[:, :, w] << _ONE) | (ph[:, :, w - 1] >> _SIX3)
-            mh_sh[:, :, w] = (mh[:, :, w] << _ONE) | (mh[:, :, w - 1] >> _SIX3)
-        xv = eq | mv
-        pv = mh_sh | ~(xv | ph_sh)
-        mv = ph_sh & xv
-        # capture finished choices (dist(a, b[:j+1]) when len(b) == j+1)
-        done = lb == (j + 1)
-        if done.any():
-            out[:, done] = score[:, done]
-    # re-assert trivial rows/cols (loop may have overwritten via capture)
-    if empty_q.any():
-        out[empty_q, :] = lb[None, :].astype(np.int32)
-    if zero_b.any():
-        out[:, zero_b] = la[:, None].astype(np.int32)
+                shapes: np.ndarray) -> np.ndarray:
+    """Distances of every document's (query, choice) pairs, documents in
+    order, each row-major; document d owns the next ``shapes[d, 0]``
+    queries and ``shapes[d, 1]`` choices of the two lists."""
+    nq, nc = shapes[:, 0], shapes[:, 1]
+    queries, choices = _tables(q_texts, c_texts, nq, nc)
+    la, lb = queries[0], choices[0]
+    # the flat pair index: pair k of document d is (query q0 + k // nc,
+    # choice c0 + k % nc)
+    sizes = nq * nc
+    doc = np.repeat(np.arange(len(shapes)), sizes)
+    k = np.arange(doc.size) - np.repeat(np.cumsum(sizes) - sizes, sizes)
+    pq = (np.cumsum(nq) - nq)[doc] + k // nc[doc]
+    pc = (np.cumsum(nc) - nc)[doc] + k % nc[doc]
+    del doc, k              # pair-sized arrays set the peak: drop them early
+    # by word count W, then longest choice first: each bucket is a run of
+    # this order, and within it the pairs live at a column are a prefix
+    w = (la[pq] + 63) // 64
+    w[lb[pc] == 0] = 0
+    order = np.lexsort((-lb[pc], w))
+    pq, pc, w = pq[order], pc[order], w[order]
+    # a pair with an empty side costs the other side's length
+    dist = (la[pq] + lb[pc]).astype(np.int32)
+    words = np.unique(w[w > 0])
+    bounds = np.searchsorted(w, np.append(words, words[-1:] + 1))
+    del w
+    for W, lo, hi in zip(words, bounds[:-1], bounds[1:]):
+        dist[lo:hi] = _myers_bucket(int(W), pq[lo:hi], pc[lo:hi],
+                                    queries, choices)
+    out = np.empty_like(dist)
+    out[order] = dist
     return out
+
+
+def _bitmasks(W: int, uq: np.ndarray, queries: tuple
+              ) -> tuple[np.ndarray, np.ndarray]:
+    """Pattern bitmasks of the queries ``uq``: ``peq[w, row[i] + v]`` holds
+    the bits of word w where query ``uq[i]`` has vocabulary char v."""
+    la, q_off, q_idx, q_width = queries
+    ql, width = la[uq], q_width[uq]
+    row = np.cumsum(width) - width
+    q_rep = np.repeat(np.arange(len(uq)), ql)
+    pos = np.arange(q_rep.size) - np.repeat(np.cumsum(ql) - ql, ql)
+    chars = q_idx[np.repeat(q_off[uq], ql) + pos]
+    peq = np.zeros((W, int(width.sum())), dtype=np.uint64)
+    np.bitwise_or.at(peq, (pos >> 6, row[q_rep] + chars),
+                     _ONE << (pos & 63).astype(np.uint64))
+    return peq, row
+
+
+def _myers_bucket(W: int, pq: np.ndarray, pc: np.ndarray,
+                  queries: tuple, choices: tuple) -> np.ndarray:
+    """Distances of the pairs ``(pq, pc)``, whose queries all span ``W``
+    words and whose choices are non-empty, sorted longest first
+    (``queries`` and ``choices`` as returned by :func:`_tables`)."""
+    lb, c_off, c_idx = choices
+    uq, q_loc = np.unique(pq, return_inverse=True)
+    peq, row = _bitmasks(W, uq, queries)
+    qbase = row[q_loc]
+    score = queries[0][pq].astype(np.int32)
+    hb = _ONE << ((score - 1).astype(np.uint64) & _SIX3)
+    del q_loc
+    cur = c_off[pc]                         # each pair's next choice char
+    steps = int(lb[pc[0]])
+    n_live = np.searchsorted(-lb[pc], -np.arange(1, steps + 1))
+    pv = np.full((W, len(pq)), _FULL, dtype=np.uint64)
+    mv = np.zeros((W, len(pq)), dtype=np.uint64)
+    n = len(pq)
+    for j in range(steps):
+        key = c_idx[cur[:n]]
+        key += qbase[:n]
+        eq = peq[:, key]                                    # (W, n)
+        pvn = pv[:, :n]
+        mvn = mv[:, :n]
+        # Xh = (((Eq & Pv) + Pv) ^ Pv) | Eq with the add carried across words
+        xh = eq & pvn
+        xh += pvn
+        if W > 1:
+            carry = xh < pvn
+            for w in range(1, W):
+                xh[w] += carry[w - 1]
+                carry[w] |= carry[w - 1] & (xh[w] == 0)
+        xh ^= pvn
+        xh |= eq
+        # Ph = Mv | ~(Xh | Pv), Mh = Pv & Xh
+        ph = xh | pvn
+        np.invert(ph, out=ph)
+        ph |= mvn
+        mh = np.bitwise_and(pvn, xh, out=xh)
+        # every query's high bit sits in the last word (W = ceil(la/64))
+        score[:n] += (ph[W - 1] & hb[:n]) != 0
+        score[:n] -= (mh[W - 1] & hb[:n]) != 0
+        # shift left across words: Ph shifts in 1, Mh shifts in 0
+        if W > 1:
+            ph_out = ph[:-1] >> _SIX3
+            mh_out = mh[:-1] >> _SIX3
+        ph <<= _ONE
+        ph[0] |= _ONE
+        mh <<= _ONE
+        if W > 1:
+            ph[1:] |= ph_out
+            mh[1:] |= mh_out
+        # Pv = Mh | ~(Xv | Ph), Mv = Ph & Xv with Xv = Eq | Mv
+        xv = np.bitwise_or(eq, mvn, out=eq)
+        np.bitwise_and(ph, xv, out=mvn)
+        xv |= ph
+        np.invert(xv, out=xv)
+        np.bitwise_or(mh, xv, out=pvn)
+        # a pair whose choice ends at column j keeps its final score
+        cur[:n] += 1
+        n = n_live[j]
+    return score

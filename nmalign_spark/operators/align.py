@@ -104,7 +104,8 @@ def _batched_doc_rows(docs, normalization, cutoff, try_subseg) -> list[list[tupl
     keep executors saturated"), then the sequential assignment per document
     with its matrix injected.  ``docs`` = [(url, l1, l2, line_nos)];
     returns per-document row lists (same values as unbatched calls —
-    tests/test_align_spark.py asserts equality)."""
+    tests/test_align_spark.py::test_batched_doc_rows_equal_per_page_rows
+    asserts equality)."""
     from ..functions.normalize import make_preprocessor
     from ..kernel.lev import cdist_levenshtein_many
     preprocess = make_preprocessor(normalization)

@@ -32,6 +32,50 @@ def test_reference_lines_filter_keeps_original_numbers():
     assert nos == [0, 2, 4]
 
 
+def test_batched_doc_rows_equal_per_page_rows():
+    """In process, no Spark: one flat similarity pass over a batch gives the
+    rows of aligning each page alone with no injected matrix, on pages with
+    only <= 64-char segments, pages with longer ones, and a page with a
+    ~1,000-char reference line."""
+    import random
+
+    from nmalign_spark.operators.align import _batched_doc_rows
+    rng = random.Random(7)
+    vocab = ["straße", "haus", "über", "ein", "der", "mann", "kam", "nach",
+             "ärger", "zeit", "lang", "wort", "schloss", "stadt"]
+
+    def line(k):
+        return " ".join(rng.choice(vocab) for _ in range(k))
+
+    def ocr(s):  # the normalization undoes all but the n -> m confusion
+        s = s.replace("s", "ſ").replace("ä", "aͤ").replace("ü", "uͤ")
+        return s.replace("n", "m", 1)
+
+    docs = []
+    for p in range(12):
+        l2 = [line(4 if p % 2 else 14) for _ in range(rng.randint(2, 6))]
+        l1 = [ocr(s) for s in l2]
+        half = len(l1[0]) // 2
+        l1[:1] = [l1[0][:half], l1[0][half:]]  # a split line for subseg
+        rng.shuffle(l1)
+        docs.append((f"u{p}", l1, l2, list(range(len(l2)))))
+    para = line(200)
+    docs.append(("para", [ocr(para[:60]), ocr(para[60:300]), line(3)],
+                 [para, line(5)], [0, 2]))
+    docs.append(("no-segments", [], ["x"], [0]))
+    docs.append(("no-reference", ["lonely"], [], []))
+    seg_lens = [len(s) for _, l1, _, _ in docs for s in l1]
+    assert min(seg_lens) <= 64 < max(seg_lens) and len(para) >= 1000
+
+    got = _batched_doc_rows(docs, DEFAULT_NORMALIZATION, None, True)
+    want = [align_lists_rows(url, l1, l2, nos,
+                             normalization=DEFAULT_NORMALIZATION,
+                             cutoff=None, try_subseg=True)
+            for url, l1, l2, nos in docs]
+    assert got == want
+    assert any(r[4] >= 0 for rows in got for r in rows)  # subseg splits ran
+
+
 def test_pages_source_deterministic(spark, sf_small):
     a = pages_from_documents(spark, sf_small).orderBy("url").limit(5).collect()
     b = pages_from_documents(spark, sf_small).orderBy("url").limit(5).collect()
