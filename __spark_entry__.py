@@ -63,16 +63,18 @@ def _q_align_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_queries_oracle.py::test_gate_window_integrity pins that the
 # first-50 window contains all of groups (1)+(2).
 _GATE_PRIORITY = [
-    # (1) keys whose code changed this round: every alignment scores its
-    # similarity matrix in one flat multi-word Myers pass (kernel/myers.py;
-    # no page leaves the batched pass, and the dense per-document call is
-    # the same pass) — every query built on align_pages, align_segments,
-    # align_cogrouped, the salted path or match() —
+    # (1) keys whose code changed this round: every subseg call scores its
+    # partial-ratio windows in one pooled multi-word bit-parallel LCS pass
+    # (kernel/lev.py; no needle length falls back to a dense Indel DP), and
+    # match() normalizes each string once — every query built on
+    # align_pages, align_segments, align_cogrouped, the salted path or
+    # match() —
     "u1_align_pages", "u1_align_segments", "u1_align_salted",
     "u1_align_identity", "u1_align_noisy", "s7_mets_workspace",
     "k2_pagexml_merge", "k3_page_metrics", "k3_corpus_metrics",
     "a4_assemble_pages", "a5_unmatched_lines",
-    # and in the round before: training_split (its kept-id manifest is a
+    # and in the rounds before: the same keys (one flat multi-word Myers
+    # pass, kernel/myers.py) and training_split (its kept-id manifest is a
     # local checkpoint instead of a temp-directory parquet table)
     "training_split",
     # (2) the 33 keys the r5 driver window did not sample

@@ -42,6 +42,7 @@ Two implementations of the identical semantics:
 from __future__ import annotations
 
 import bisect
+import functools
 
 import numpy as np
 
@@ -81,7 +82,9 @@ def match(l1, l2, workers=1, normalization=None, cutoff=None, try_subseg=False,
     assert len(l2) > 0
     assert isinstance(l1[0], str)
     assert isinstance(l2[0], str)
-    preprocess = make_preprocessor(normalization)
+    # one normalization per distinct string per call: the matrix stage and
+    # every subseg call (align.py:181-184, 205) see the same lines
+    preprocess = functools.cache(make_preprocessor(normalization))
     if dist is None:
         dist = cdist_levenshtein(l1, l2, score_cutoff=cutoff,
                                  processor=preprocess)

@@ -19,15 +19,10 @@ Design notes (scale): the hot call is the similarity matrix of every
 document's line lists inside an Arrow batch, :func:`cdist_levenshtein_many`.
 It runs on the bit-parallel Myers kernel (kernel/myers.py): one flat pass
 over every (query, choice) pair of the batch, whatever the line lengths.
-The dense DP over a 3-D tensor ``(N queries × M choices × max-choice-length)``
-(:func:`_batched_dp`) serves only the Indel windows of the
-partial-ratio fallback for needles over 64 chars.  Its horizontal DP
-dependency (``D[i][j] = min(..., D[i][j-1]+1)``) is solved in closed form
-with a cumulative minimum::
-
-    D[i][j] = j + cummin_k<=j ( E[k] - k )   where E = vertical/diagonal min
-
-which keeps the whole inner recurrence inside NumPy.
+The partial-ratio windows are scored the same way: one pooled pass of the
+bit-parallel LCS recurrence over every (needle, window) lane of a call,
+whatever the needle length, with kernel/myers.py's bitmask tables
+(:func:`_window_sims_multi`).
 """
 
 from __future__ import annotations
@@ -35,7 +30,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from functools import lru_cache as _lru_cache
+
+from .myers import _FULL, _bitmasks, _tables
 
 __all__ = [
     "ScoreAlignment",
@@ -67,22 +63,6 @@ class ScoreAlignment:
     src_end: int
     dest_start: int
     dest_end: int
-
-
-def _encode(s: str) -> np.ndarray:
-    """Unicode string -> uint32 codepoint array (O(n), no Python loop)."""
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-
-
-def _pad_encode(strings: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """Encode a list of strings into a zero-padded (n, maxlen) matrix + lengths."""
-    lens = np.fromiter((len(s) for s in strings), dtype=np.int64, count=len(strings))
-    maxlen = int(lens.max()) if len(lens) else 0
-    out = np.zeros((len(strings), max(maxlen, 1)), dtype=np.uint32)
-    for k, s in enumerate(strings):
-        if s:
-            out[k, : len(s)] = _encode(s)
-    return out, lens
 
 
 # ---------------------------------------------------------------------------
@@ -151,51 +131,6 @@ def indel_normalized_similarity(a: str, b: str) -> float:
 
 
 # ---------------------------------------------------------------------------
-# batched DP core
-# ---------------------------------------------------------------------------
-
-def _batched_dp(A: np.ndarray, lens1: np.ndarray, B: np.ndarray, lens2: np.ndarray,
-                sub_cost: int) -> np.ndarray:
-    """Batched edit-distance DP.
-
-    A: (N, La) padded query codepoints, lens1: (N,)
-    B: (M, Lb) padded choice codepoints, lens2: (M,)
-    sub_cost: 1 for Levenshtein, 2 for Indel (substitution via ins+del).
-
-    Returns (N, M) int32 distance matrix.  Python loop runs max(lens1) times;
-    all inner work is (N, M, Lb)-shaped NumPy.
-    """
-    n, la_max = A.shape[0], int(lens1.max()) if A.shape[0] else 0
-    m, lb_max = B.shape[0], int(lens2.max()) if B.shape[0] else 0
-    out = np.empty((n, m), dtype=np.int32)
-    if n == 0 or m == 0:
-        return out
-    jj = np.arange(lb_max + 1, dtype=np.int32)
-    # row i=0: distance to prefix j is j deletions
-    prev = np.broadcast_to(jj, (n, m, lb_max + 1)).copy()
-    # queries of length 0: answer is len(b)
-    done0 = lens1 == 0
-    if done0.any():
-        out[done0, :] = lens2[np.newaxis, :].astype(np.int32)
-    for i in range(1, la_max + 1):
-        ca = A[:, i - 1][:, None, None]                      # (N,1,1)
-        cost = np.where(B[None, :, :] == ca, 0, sub_cost)    # (N,M,Lb)
-        # vertical / diagonal candidates
-        e = np.minimum(prev[:, :, 1:] + 1, prev[:, :, :-1] + cost)
-        full = np.concatenate(
-            [np.full((n, m, 1), i, dtype=prev.dtype), e], axis=2)
-        # horizontal closure: D[j] = j + cummin_{k<=j}(full[k] - k)
-        cur = jj + np.minimum.accumulate(full - jj, axis=2)
-        hit = lens1 == i
-        if hit.any():
-            out[hit, :] = np.take_along_axis(
-                cur[hit], lens2[None, :, None].repeat(int(hit.sum()), 0), axis=2
-            )[:, :, 0].astype(np.int32)
-        prev = cur
-    return out
-
-
-# ---------------------------------------------------------------------------
 # cdist (rapidfuzz.process.cdist equivalents, align.py:60-61 / 181-184)
 # ---------------------------------------------------------------------------
 
@@ -261,14 +196,15 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
     Mirrors align.py:181-184 (``scorer=partial_ratio, score_cutoff=50``):
     scores below cutoff report 0.
 
-    Batching: the windowed scans of ALL uncached pairs run in ONE pooled
-    bit-parallel pass (:func:`_window_sims_multi`) — one 64-step numpy loop
-    per cdist call instead of one per pair — then a second pooled pass for
-    the equal-length reversed orientations that the partial_ratio swap rule
-    requires.  Results (bit-identical to the per-pair path, asserted in
+    Batching: the windows of ALL uncached pairs, whatever the needle
+    length, are scored in ONE pooled bit-parallel pass
+    (:func:`_window_sims_multi`; more only when their state would exceed
+    ``_MULTI_CELL_BUDGET``), then a second pooled pass scores the
+    equal-length reversed orientations that the partial_ratio swap rule
+    requires.  Results (identical to the per-pair path, asserted in
     tests/test_kernel_lev.py) are held in a call-local dict — immune to
     ``_PR_CACHE`` evictions when a call has more pairs than the cache cap —
-    and opportunistically inserted into the cache so the exact
+    and also inserted into the cache so the exact
     ``partial_ratio_alignment`` phase of the subseg kernel reuses them.
     """
     if processor is not None:
@@ -277,12 +213,9 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
 
     local: dict[tuple[str, str], tuple] = {}
 
-    def put(k, val) -> None:
-        local[k] = val
-        _pr_cache_put(k, val)
-
     def batch_compute(keys) -> None:
-        """Score (needle, haystack) keys via the pooled scan."""
+        """Score the (needle, haystack) keys in one pooled pass, all but
+        those already known from this call or the cache."""
         todo = []
         for k in keys:
             if k in local:
@@ -292,23 +225,9 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
                 local[k] = cached
             else:
                 todo.append(k)
-        fast, slow = [], []
-        for k in todo:
-            s1, s2 = k
-            windows = _pr_windows(s1, s2)
-            if not windows:
-                put(k, (0.0, 0, len(s1), 0, len(s1)))
-            elif 1 <= len(s1) <= 64:
-                fast.append((k, windows))
-            else:
-                slow.append(k)
-        if fast:
-            sims_list = _window_sims_multi(
-                [(k[0], windows, k[1]) for k, windows in fast])
-            for (k, windows), sims in zip(fast, sims_list):
-                put(k, _best_window(windows, sims, len(k[0])))
-        for k in slow:
-            local[k] = _partial_ratio_cached(*k)
+        for k, val in zip(todo, _scan(todo)):
+            local[k] = val
+            _pr_cache_put(k, val)
 
     # orientation per pair (the partial_ratio swap rule): needle = shorter
     pairs = [(q, c) for q in queries for c in choices]
@@ -317,7 +236,7 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
     # equal-length second orientation, needed when the first scan is < 100
     batch_compute({(c, q) for q, c in pairs
                    if q and c and len(q) == len(c)
-                   and local.get((q, c), (0.0,))[0] != 100.0})
+                   and local[(q, c)][0] != 100.0})
 
     def score_pair(q: str, c: str) -> float:
         # partial_ratio_alignment's swap rule, read from the local results
@@ -326,16 +245,9 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
             return 100.0
         if lq == 0 or lc == 0:
             return 0.0
-        key = (q, c) if lq <= lc else (c, q)
-        val = local.get(key)
-        if val is None:                            # cache hit path above
-            val = _partial_ratio_cached(*key)
-        sc = val[0]
+        sc = local[(q, c) if lq <= lc else (c, q)][0]
         if sc != 100.0 and lq == lc:
-            rev = local.get((c, q))
-            if rev is None:
-                rev = _partial_ratio_cached(c, q)
-            sc = max(sc, rev[0])
+            sc = max(sc, local[(c, q)][0])
         return sc
 
     out = np.zeros((len(queries), len(choices)), dtype=np.float32)
@@ -352,177 +264,98 @@ def cdist_partial_ratio(queries: list[str], choices: list[str],
 # partial_ratio — best Indel window of the shorter string inside the longer
 # ---------------------------------------------------------------------------
 
-@_lru_cache(maxsize=16)
-def _haystack_profile(s2: str):
-    """(codepoints, unique chars, inverse index) of a haystack, memoized:
-    the subseg candidate scan scores MANY needles against the SAME seg2
-    (align.py:181-184), so the per-call unique/encode was pure overhead."""
-    s2c = _encode(s2)
-    uniq, inv = np.unique(s2c, return_inverse=True)
-    return s2c, uniq, inv
-
-
-def _window_sims_dp(s1: str, windows: list[tuple[int, int]], s2: str) -> np.ndarray:
-    """Dense-DP fallback (needles > 64 chars): one batched Indel DP over all
-    windows at once."""
-    subs = [s2[st:en] for st, en in windows]
-    A1 = np.frombuffer(s1.encode("utf-32-le"), dtype=np.uint32)[None, :]
-    l1 = np.array([len(s1)], dtype=np.int64)
-    B, l2 = _pad_encode(subs)
-    dist = _batched_dp(A1, l1, B, l2, sub_cost=2)[0].astype(np.float64)
-    return 1.0 - dist / (len(s1) + l2)
-
-
-def _window_sims(s1: str, windows: list[tuple[int, int]], s2: str) -> np.ndarray:
-    """Indel normalized similarity of needle ``s1`` vs each ``s2[st:en]``
-    window.
-
-    Fast path (needle <= 64 chars, the common case for text lines): the
-    classic bit-parallel LCS recurrence — ``u = S & M[c]; S = (S+u)|(S-u)``,
-    LCS = popcount(~S) — vectorized across ALL windows at once (one uint64
-    lane per window, one step per window character).  Indel distance then
-    follows from ``|a|+|b| - 2*LCS``.  O(maxwin) numpy steps of O(W) work vs
-    the dense DP's O(|s1|·W·maxwin); measured ~6x faster on the subseg
-    workload and bit-identical to the DP on randomized cross-checks
-    (tests/test_kernel_lev.py).
-    """
-    n = len(s1)
-    if n == 0 or not windows:
-        return _window_sims_dp(s1, windows, s2)
-    if n > 64:
-        return _window_sims_dp(s1, windows, s2)
-    midx, lens = _window_mask(s1, windows, s2)
-    W = len(windows)
-    S = np.full(W, np.uint64(0xFFFFFFFFFFFFFFFF), dtype=np.uint64)
-    maxlen = midx.shape[1]
-    with np.errstate(over="ignore"):
-        for t in range(maxlen):
-            u = S & midx[:, t]
-            S = (S + u) | (S - u)
-    lcs = np.unpackbits((~S).view(np.uint8).reshape(W, 8),
-                        axis=1).sum(axis=1).astype(np.float64)
-    dist = n + lens - 2.0 * lcs
-    return 1.0 - dist / (n + lens)
-
-
-def _window_mask(s1: str, windows, s2: str):
-    """(W, maxlen) uint64 mask matrix + window lengths for the bit-parallel
-    scan: row w, column t holds needle-char bitmask of ``s2[start_w + t]``,
-    zero beyond the window's length (a zero mask is a no-op step)."""
-    s2c, uniq, inv = _haystack_profile(s2)
-    p1 = _encode(s1)
-    M = np.zeros(len(uniq), dtype=np.uint64)
-    idx = np.searchsorted(uniq, p1)
-    ok = idx < len(uniq)
-    ok &= uniq[np.clip(idx, 0, len(uniq) - 1)] == p1
-    for k in np.flatnonzero(ok):
-        M[idx[k]] |= np.uint64(1) << np.uint64(k)
-    starts = np.fromiter((st for st, _ in windows), dtype=np.int64,
-                         count=len(windows))
-    lens = np.fromiter((en - st for st, en in windows), dtype=np.int64,
-                       count=len(windows))
-    maxlen = int(lens.max())
-    pos = np.clip(starts[:, None] + np.arange(maxlen)[None, :], 0,
-                  len(s2c) - 1)
-    midx = M[inv[pos]]
-    midx[np.arange(maxlen)[None, :] >= lens[:, None]] = np.uint64(0)
-    return midx, lens
-
-
-_MULTI_CELL_BUDGET = 1 << 22        # uint64 cells per pooled pass (~32 MB)
-
-
 def _window_sims_multi(tasks) -> list[np.ndarray]:
-    """Bounded-memory wrapper over :func:`_window_sims_multi_impl`: the
-    pooled pass materializes a (total_windows x maxlen) uint64 matrix, so
-    many needles against a long haystack (the SUBSEG_ACC_MIN=0 gate selects
-    every line) could peak at hundreds of MB.  Tasks are processed in
-    chunks whose estimated cell count stays under ``_MULTI_CELL_BUDGET``;
-    padding is chunk-local, results stay bit-identical (asserted by
-    tests/test_kernel_lev.py)."""
-    sizes = [(len(windows), max(en - st for st, en in windows))
-             for _, windows, _ in tasks]
-    out: list[np.ndarray] = []
-    start = 0
-    while start < len(tasks):
-        end, width, wmax = start, 0, 0
-        while end < len(tasks):
-            w, m = sizes[end]
-            n_width, n_wmax = width + w, max(wmax, m)
-            if end > start and n_width * n_wmax > _MULTI_CELL_BUDGET:
-                break
-            width, wmax = n_width, n_wmax
-            end += 1
-        out.extend(_window_sims_multi_impl(tasks[start:end]))
-        start = end
-    return out
+    """One bit-parallel LCS pass over the windows of many ``(s1, windows,
+    s2)`` tasks, whatever the needle lengths.
+
+    Each window is a lane that runs the classic recurrence over its
+    characters c — ``u = S & M[c]; S = (S + u) | (S - u)``, LCS =
+    popcount(~S) — and the Indel similarity follows from ``|a|+|b| -
+    2*LCS``.  Lanes are bucketed by their needle's word count W =
+    ⌈len(s1)/64⌉ (:func:`_lcs_bucket`).  The needle bitmasks come from
+    kernel/myers.py's ``_tables``/``_bitmasks``, with each needle a query,
+    its haystack a choice, and one vocabulary per task."""
+    nwin = np.fromiter((len(w) for _, w, _ in tasks), dtype=np.int64,
+                       count=len(tasks))
+    win = np.array([w for _, ws, _ in tasks for w in ws],
+                   dtype=np.int64).reshape(-1, 2)
+    lane_task = np.repeat(np.arange(len(tasks)), nwin)
+    wlen = win[:, 1] - win[:, 0]
+    ones = np.ones(len(tasks), dtype=np.int64)
+    queries, choices = _tables([t[0] for t in tasks], [t[2] for t in tasks],
+                               ones, ones)
+    n1 = queries[0][lane_task]
+    words = (n1 + 63) // 64
+    lcs = np.empty(len(win), dtype=np.int64)
+    for W in np.unique(words):
+        # longest window first: the lanes live at a step are a prefix
+        lanes = np.flatnonzero(words == W)
+        lanes = lanes[np.argsort(-wlen[lanes])]
+        lcs[lanes] = _lcs_bucket(int(W), lane_task[lanes], win[lanes, 0],
+                                 wlen[lanes], queries, choices)
+    dist = n1 + wlen - 2.0 * lcs
+    sims = 1.0 - dist / (n1 + wlen)
+    return np.split(sims, np.cumsum(nwin)[:-1])
 
 
-def _window_sims_multi_impl(tasks) -> list[np.ndarray]:
-    """One bit-parallel scan over the pooled windows of MANY (s1, windows,
-    s2) tasks — the cross-pair batching of :func:`_window_sims` used by
-    ``cdist_partial_ratio`` (one 64-step loop per cdist call instead of one
-    per pair).  Lanes are padded to the chunk's max window length with zero
-    masks (no-op steps), so every lane computes exactly what its
-    single-task call would: bit-identical results, asserted by
-    tests/test_kernel_lev.py.
-
-    Requires every task to have ``1 <= len(s1) <= 64`` and non-empty
-    windows (callers route the rest through :func:`_window_sims`)."""
-    per = [(_window_mask(s1, windows, s2), len(s1))
-           for s1, windows, s2 in tasks]
-    widths = [m.shape[0] for (m, _), _ in per]
-    total = sum(widths)
-    maxlen = max(m.shape[1] for (m, _), _ in per)
-    big = np.zeros((total, maxlen), dtype=np.uint64)
-    lens = np.empty(total, dtype=np.int64)
-    n1 = np.empty(total, dtype=np.int64)
-    off = 0
-    for ((midx, wlens), n), w in zip(per, widths):
-        big[off:off + w, :midx.shape[1]] = midx
-        lens[off:off + w] = wlens
-        n1[off:off + w] = n
-        off += w
-    S = np.full(total, np.uint64(0xFFFFFFFFFFFFFFFF), dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        for t in range(maxlen):
-            u = S & big[:, t]
-            S = (S + u) | (S - u)
-    lcs = np.unpackbits((~S).view(np.uint8).reshape(total, 8),
-                        axis=1).sum(axis=1).astype(np.float64)
-    dist = n1 + lens - 2.0 * lcs
-    sims = 1.0 - dist / (n1 + lens)
-    out, off = [], 0
-    for w in widths:
-        out.append(sims[off:off + w])
-        off += w
-    return out
+# the number of set bits of each byte value
+_POP8 = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
+    axis=1, dtype=np.uint8)
 
 
-def _partial_ratio_impl(s1: str, s2: str) -> ScoreAlignment:
-    """Core windowed scan; requires ``len(s1) <= len(s2)`` and ``s1`` non-empty.
-
-    Window set and update rule follow the published partial_ratio contract:
-    candidate windows are all prefixes of s2 shorter than |s1|, every
-    |s1|-length substring, and all suffixes shorter than |s1|; a window is
-    only examined when its boundary character occurs in s1 (it cannot beat
-    the previous window otherwise); the best score wins with *strict*
-    improvement, so the earliest maximal window determines the alignment —
-    the determinism the reference's span arithmetic relies on
-    (align.py:208-211).
-    """
-    len1 = len(s1)
-    windows = _pr_windows(s1, s2)
-    if not windows:
-        return ScoreAlignment(0.0, 0, len1, 0, len1)
-    sims = _window_sims(s1, windows, s2)
-    sc, ss, se, ds, de = _best_window(windows, sims, len1)
-    return ScoreAlignment(sc, ss, se, ds, de)
+def _lcs_bucket(W: int, task: np.ndarray, start: np.ndarray,
+                wlen: np.ndarray, queries: tuple, choices: tuple
+                ) -> np.ndarray:
+    """LCS of each lane's needle, which spans ``W`` words, with its window
+    of ``wlen`` haystack chars from ``start``; lanes sorted longest window
+    first (``queries`` and ``choices`` as returned by ``myers._tables``)."""
+    lb, c_off, c_idx = choices
+    uq = np.unique(task)
+    peq, row = _bitmasks(W, uq, queries)
+    # each haystack char's column in its needle's bitmask row
+    base = np.zeros(len(lb), dtype=np.int64)
+    base[uq] = row
+    col = c_idx + np.repeat(base, lb)
+    cur = c_off[task] + start                # each lane's next window char
+    steps = int(wlen[0])
+    n_live = np.searchsorted(-wlen, -np.arange(1, steps + 1))
+    S = np.full((W, len(task)), _FULL, dtype=np.uint64)
+    n = len(task)
+    for j in range(steps):
+        s = S[:, :n]
+        u = peq[:, col[cur[:n]]]                            # (W, n)
+        u &= s
+        # S = (S + u) | (S - u); u ⊆ S, so S - u borrows nothing, and
+        # only the addition carries across words
+        d = s - u
+        s += u
+        if W > 1:
+            carry = s < u
+            for w in range(1, W):
+                s[w] += carry[w - 1]
+                carry[w] |= carry[w - 1] & (s[w] == 0)
+        s |= d
+        cur[:n] += 1
+        n = n_live[j]
+    # LCS = popcount(~S) over the lane's words; the bits above the needle
+    # stay set, so only the needle's bits count
+    pop = _POP8[(~S).view(np.uint8)]                        # (W, 8 lanes)
+    return pop.reshape(W, len(task), 8).sum(axis=(0, 2), dtype=np.int64)
 
 
 def _pr_windows(s1: str, s2: str) -> list[tuple[int, int]]:
-    """Candidate windows of the partial_ratio contract (see
-    :func:`_partial_ratio_impl`); requires ``len(s1) <= len(s2)``."""
+    """Candidate windows of the partial_ratio contract; requires
+    ``len(s1) <= len(s2)``.
+
+    Window set and update rule follow the published partial_ratio
+    contract: candidate windows are all prefixes of s2 shorter than |s1|,
+    every |s1|-length substring, and all suffixes shorter than |s1|; a
+    window is only examined when its boundary character occurs in s1 (it
+    cannot beat the previous window otherwise); the best score wins with
+    *strict* improvement (:func:`_best_window`), so the earliest maximal
+    window determines the alignment — the determinism the reference's span
+    arithmetic relies on (align.py:208-211).
+    """
     len1, len2 = len(s1), len(s2)
     charset = set(s1)
     windows: list[tuple[int, int]] = []
@@ -552,6 +385,40 @@ def _best_window(windows, sims, len1: int):
     return (best * 100.0, 0, len1, ds, de)
 
 
+_MULTI_CELL_BUDGET = 1 << 18        # (W, lanes) state words per pooled pass
+
+
+def _chunks(keys):
+    """The ``(s1, windows, s2)`` tasks of the (needle, haystack) ``keys``,
+    in chunks whose state words stay under ``_MULTI_CELL_BUDGET`` (2 MB).
+
+    A pooled pass holds W = ⌈len(s1)/64⌉ state words per window plus a few
+    per-window index vectors and step temporaries, and a task's window list
+    lives until its chunk is scored, so many needles against a long
+    haystack (the SUBSEG_ACC_MIN=0 gate selects every line) are scored a
+    chunk at a time.  Every window is scored on its own lane, so results
+    do not depend on the chunking (asserted by tests/test_kernel_lev.py)."""
+    tasks, words = [], 0
+    for s1, s2 in keys:
+        windows = _pr_windows(s1, s2)
+        cost = -(-len(s1) // 64) * len(windows)
+        if tasks and words + cost > _MULTI_CELL_BUDGET:
+            yield tasks
+            tasks, words = [], 0
+        tasks.append((s1, windows, s2))
+        words += cost
+    if tasks:
+        yield tasks
+
+
+def _scan(keys) -> list[tuple]:
+    """Result tuples of the (needle, haystack) ``keys``, each needle no
+    longer than its haystack: the windows of all keys in pooled passes."""
+    return [_best_window(windows, sims, len(s1))
+            for tasks in _chunks(keys)
+            for (s1, windows, _), sims in zip(tasks, _window_sims_multi(tasks))]
+
+
 _PR_CACHE: "dict[tuple[str, str], tuple]" = {}
 _PR_CACHE_MAX = 4096
 
@@ -566,7 +433,7 @@ def _pr_cache_put(key, val) -> None:
 
 def _partial_ratio_cached(s1: str, s2: str):
     """Memoized windowed scan as an IMMUTABLE tuple (score, src_start,
-    src_end, dest_start, dest_end).
+    src_end, dest_start, dest_end); requires ``len(s1) <= len(s2)``.
 
     The subseg kernel scores the same (needle, seg2) pair twice with
     identical strings — once in the coarse ``cdist_partial_ratio`` gate
@@ -578,8 +445,7 @@ def _partial_ratio_cached(s1: str, s2: str):
     key = (s1, s2)
     val = _PR_CACHE.get(key)
     if val is None:
-        r = _partial_ratio_impl(s1, s2)
-        val = (r.score, r.src_start, r.src_end, r.dest_start, r.dest_end)
+        val = _scan([key])[0]
         _pr_cache_put(key, val)
     return val
 

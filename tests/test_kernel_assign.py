@@ -180,3 +180,39 @@ def test_interactive_does_not_mutate_injected_dist():
     snapshot = dist.copy()
     match(l1, l2, dist=dist, interactive=lambda t: False)  # reject all
     assert np.array_equal(dist, snapshot)
+
+
+def test_each_string_normalized_once_per_match(monkeypatch):
+    """One ``match`` call normalizes each distinct string at most once,
+    although the matrix stage and every subseg call score the same lines."""
+    from collections import Counter
+
+    from nmalign_spark.kernel import assign
+
+    seen = Counter()
+    real = assign.make_preprocessor
+
+    def counting(normalization):
+        fn = real(normalization)
+
+        def preprocess(s):
+            seen[s] += 1
+            return fn(s)
+        return preprocess
+
+    calls = []
+    real_subseg = assign.match_subseg
+
+    def subseg_spy(*args, **kwargs):
+        calls.append(args[1])
+        return real_subseg(*args, **kwargs)
+
+    monkeypatch.setattr(assign, "make_preprocessor", counting)
+    monkeypatch.setattr(assign, "match_subseg", subseg_spy)
+    l1 = ["the quickk brown fox junps", "ovre the lazy sleping dog",
+          "a ſecond merged line begins", "and it endſ right about here"]
+    l2 = ["the quick brown fox jumps over the lazy sleeping dog",
+          "a second merged line begins and it ends right about here"]
+    match(l1, l2, normalization={"ſ": "s"}, try_subseg=True)
+    assert len(calls) >= 2
+    assert seen and max(seen.values()) == 1

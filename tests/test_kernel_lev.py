@@ -4,7 +4,7 @@ pure-Python oracles)."""
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from nmalign_spark.kernel.lev import (
@@ -156,40 +156,136 @@ def test_cdist_partial_ratio_cutoff():
 
 @settings(max_examples=120, deadline=None)
 @given(texts, texts)
-def test_window_sims_bitparallel_matches_dp(s1, s2):
-    """The <=64-char bit-parallel LCS window scorer must equal the dense DP
-    on the exact window set _partial_ratio_impl generates."""
-    from nmalign_spark.kernel.lev import _window_sims, _window_sims_dp
+@example("ab" * 40, "xx" + "ab" * 40 + "yy")      # 2-word needle, exact hit
+@example("aſb" * 43, "c" + "aſbä" * 40)           # 3-word needle
+def test_window_sims_match_indel_oracle(s1, s2):
+    """The pooled bit-parallel LCS pass must equal the scalar Indel oracle
+    on every prefix, full and suffix window of the partial_ratio contract,
+    whatever the needle length."""
+    from nmalign_spark.kernel.lev import _window_sims_multi
     if not s1 or len(s1) > len(s2):
         return
     n, m = len(s1), len(s2)
     windows = [(0, i) for i in range(1, n)]
     windows += [(i, i + n) for i in range(0, m - n + 1)]
     windows += [(i, m) for i in range(m - n + 1, m)]
-    if not windows:
-        return
-    import numpy as np
-    got = _window_sims(s1, windows, s2)
-    want = _window_sims_dp(s1, windows, s2)
-    assert np.allclose(got, want, atol=1e-12)
+    [got] = _window_sims_multi([(s1, windows, s2)])
+    want = [indel_normalized_similarity(s1, s2[a:b]) for a, b in windows]
+    assert got.tolist() == want
+    if s1 in s2:
+        assert got.max() == 1.0
 
 
-def test_window_sims_long_needle_fallback():
-    from nmalign_spark.kernel.lev import _window_sims, _window_sims_dp
-    import numpy as np
-    s1 = "ab" * 40                      # 80 chars > 64 -> DP fallback
-    s2 = "xx" + s1 + "yy"
-    windows = [(i, i + len(s1)) for i in range(0, len(s2) - len(s1) + 1)]
-    got = _window_sims(s1, windows, s2)
-    want = _window_sims_dp(s1, windows, s2)
-    assert np.allclose(got, want)
-    assert got.max() == 1.0
+# --- long needles: 1, 2 and 3 words of the bit-parallel state -------------
+
+LONG_ALPHA = "abſ ä\U0001d400\U0001f600"     # incl. non-BMP chars
+
+
+def _slow_alignment_oneway(s1, s2):
+    """First strictly-best window in ``_pr_windows`` order, each scored by
+    the scalar Indel oracle (requires len(s1) <= len(s2))."""
+    from nmalign_spark.kernel.lev import _pr_windows
+    best, ds, de = 0.0, 0, len(s1)
+    for st_, en in _pr_windows(s1, s2):
+        sim = indel_normalized_similarity(s1, s2[st_:en])
+        if sim > best:
+            best, ds, de = sim, st_, en
+            if best == 1.0:
+                break
+    return best * 100.0, 0, len(s1), ds, de
+
+
+def _slow_alignment(s1, s2):
+    """Pure-Python ``partial_ratio_alignment``: the shorter string is the
+    needle, a swapped result is swapped back, and equal lengths also try
+    the reversed roles."""
+    l1, l2 = len(s1), len(s2)
+    if l1 == 0 and l2 == 0:
+        return 100.0, 0, 0, 0, 0
+    if l1 == 0 or l2 == 0:
+        return 0.0, 0, l1, 0, min(l1, l2)
+    if l1 <= l2:
+        res = _slow_alignment_oneway(s1, s2)
+    else:
+        sc, ss, se, ds, de = _slow_alignment_oneway(s2, s1)
+        res = sc, ds, de, ss, se
+    if res[0] != 100.0 and l1 == l2:
+        sc, ss, se, ds, de = _slow_alignment_oneway(s2, s1)
+        if sc > res[0]:
+            res = sc, ds, de, ss, se
+    return res
+
+
+@st.composite
+def _long_pairs(draw):
+    n = draw(st.one_of(st.sampled_from([63, 64, 65, 127, 128, 129]),
+                       st.integers(0, 200)))
+    s1 = draw(st.text(alphabet=LONG_ALPHA, min_size=n, max_size=n))
+    kind = draw(st.sampled_from(["equal", "embedded", "random"]))
+    if kind == "equal":
+        s2 = draw(st.text(alphabet=LONG_ALPHA, min_size=n, max_size=n))
+    elif kind == "embedded":
+        # a noisy copy of the needle inside a longer haystack
+        noisy = list(s1)
+        for _ in range(draw(st.integers(0, 4))):
+            if noisy:
+                k = draw(st.integers(0, len(noisy) - 1))
+                noisy[k] = draw(st.sampled_from(LONG_ALPHA))
+        pre = draw(st.text(alphabet=LONG_ALPHA, max_size=12))
+        post = draw(st.text(alphabet=LONG_ALPHA, max_size=12))
+        s2 = pre + "".join(noisy) + post
+    else:
+        s2 = draw(st.text(alphabet=LONG_ALPHA, max_size=n + 20))
+    return (s2, s1) if draw(st.booleans()) else (s1, s2)
+
+
+@settings(max_examples=40, deadline=None)
+@given(_long_pairs())
+@example(("ab" * 32, "ba" * 32))                  # equal 64: reversed roles
+@example(("aſ" * 60 + "\U0001f600", "x" + "aſ" * 60 + "\U0001f600y"))
+def test_partial_ratio_alignment_long_needles_match_oracle(pair):
+    from nmalign_spark.kernel import lev
+    s1, s2 = pair
+    lev._PR_CACHE.clear()
+    res = partial_ratio_alignment(s1, s2)
+    want = _slow_alignment(s1, s2)
+    assert (res.score, res.dest_start, res.dest_end) == (want[0], want[3],
+                                                         want[4])
+    assert (res.src_start, res.src_end) == (want[1], want[2])
+
+
+def test_long_needle_scored_by_the_pooled_pass(monkeypatch):
+    """A needle over 64 chars is scored by the one pooled pass: every
+    window of the pair runs on a lane of ``_lcs_bucket``, on 2 or 3
+    state words."""
+    from nmalign_spark.kernel import lev
+    seen = []
+    real = lev._lcs_bucket
+
+    def spy(W, task, *args):
+        seen.append((W, len(task)))
+        return real(W, task, *args)
+
+    monkeypatch.setattr(lev, "_lcs_bucket", spy)
+    needle = "the quick brown fox jumps over the lazy dog " * 2   # 88 chars
+    hay = "xx " + needle + " yy"
+    lev._PR_CACHE.clear()
+    res = partial_ratio_alignment(needle, hay)
+    assert res.score == 100.0 and (res.dest_start, res.dest_end) == (3, 91)
+    assert seen == [(2, len(lev._pr_windows(needle, hay)))]
+    seen.clear()
+    lev._PR_CACHE.clear()
+    long3 = needle + needle[:50]                                # 138 chars
+    lev.cdist_partial_ratio([needle, long3], [hay + long3])
+    assert sorted(seen) == [
+        (2, len(lev._pr_windows(needle, hay + long3))),
+        (3, len(lev._pr_windows(long3, hay + long3)))]
 
 
 def test_cdist_partial_ratio_batched_equals_per_pair():
     """The pooled _window_sims_multi path must be bit-identical to scoring
-    every pair individually (incl. equal-length double-orientation, >64-char
-    needles via the DP fallback, empties, unicode)."""
+    every pair individually (incl. equal-length double-orientation, needles
+    of 1, 2 and 3 state words, empties, unicode)."""
     import random
 
     import numpy as np
@@ -200,8 +296,9 @@ def test_cdist_partial_ratio_batched_equals_per_pair():
     alpha = "abcdefg ſüä"
     def rs(lo, hi):
         return "".join(rng.choice(alpha) for _ in range(rng.randrange(lo, hi)))
-    queries = [rs(0, 30) for _ in range(12)] + [rs(70, 90), ""]
-    choices = [rs(0, 30) for _ in range(6)] + [rs(70, 90), queries[0], ""]
+    queries = [rs(0, 30) for _ in range(12)] + [rs(70, 90), rs(129, 180), ""]
+    choices = [rs(0, 30) for _ in range(6)] + [rs(70, 90), rs(150, 200),
+                                               queries[0], ""]
     got = lev.cdist_partial_ratio(queries, choices, score_cutoff=50)
     lev._PR_CACHE.clear()
     want = np.zeros((len(queries), len(choices)), dtype=np.float32)
@@ -244,24 +341,19 @@ def test_window_sims_multi_chunked_identical(monkeypatch):
     bit-identical to one unbounded pass."""
     import random
 
-    import numpy as np
-
     from nmalign_spark.kernel import lev
 
     rng = random.Random(21)
     alpha = "abcdeüſ "
     def rs(lo, hi):
         return "".join(rng.choice(alpha) for _ in range(rng.randrange(lo, hi)))
-    tasks = []
-    for _ in range(25):
-        s1 = rs(1, 60)
-        s2 = rs(len(s1), len(s1) + 80)
-        windows = lev._pr_windows(s1, s2)
-        if windows:
-            tasks.append((s1, windows, s2))
-    want = lev._window_sims_multi_impl(tasks)
+    keys = []
+    for lo, hi in [(1, 60)] * 25 + [(65, 128)] * 4 + [(129, 192)] * 3:
+        s1 = rs(lo, hi)
+        keys.append((s1, rs(len(s1), len(s1) + 80)))
+    rng.shuffle(keys)
+    want = lev._scan(keys)
+    assert len(list(lev._chunks(keys))) == 1
     monkeypatch.setattr(lev, "_MULTI_CELL_BUDGET", 500)
-    got = lev._window_sims_multi(tasks)
-    assert len(got) == len(want)
-    for g, w in zip(got, want):
-        assert np.array_equal(g, w)
+    assert len(list(lev._chunks(keys))) > 5
+    assert lev._scan(keys) == want
