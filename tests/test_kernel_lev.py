@@ -154,26 +154,42 @@ def test_cdist_partial_ratio_cutoff():
     assert m[1, 0] == 0.0
 
 
-@settings(max_examples=120, deadline=None)
-@given(texts, texts)
-@example("ab" * 40, "xx" + "ab" * 40 + "yy")      # 2-word needle, exact hit
-@example("aſb" * 43, "c" + "aſbä" * 40)           # 3-word needle
-def test_window_sims_match_indel_oracle(s1, s2):
-    """The pooled bit-parallel LCS pass must equal the scalar Indel oracle
-    on every prefix, full and suffix window of the partial_ratio contract,
-    whatever the needle length."""
+def _window_sims_vs_oracle(s1, s2):
+    """Scores of the pooled bit-parallel LCS pass and of the scalar Indel
+    oracle on every prefix, full and suffix window of the partial_ratio
+    contract (requires 0 < len(s1) <= len(s2))."""
     from nmalign_spark.kernel.lev import _window_sims_multi
-    if not s1 or len(s1) > len(s2):
-        return
     n, m = len(s1), len(s2)
     windows = [(0, i) for i in range(1, n)]
     windows += [(i, i + n) for i in range(0, m - n + 1)]
     windows += [(i, m) for i in range(m - n + 1, m)]
     [got] = _window_sims_multi([(s1, windows, s2)])
     want = [indel_normalized_similarity(s1, s2[a:b]) for a, b in windows]
+    return got, want
+
+
+@settings(max_examples=120, deadline=None)
+@given(texts, texts)
+@example("aſb" * 43, "c" + "aſbä" * 40)           # 3-word needle
+def test_window_sims_bitparallel_matches_dp(s1, s2):
+    """The pooled bit-parallel LCS pass must equal the scalar Indel oracle
+    (the dense-DP reference) on the exact window set of the partial_ratio
+    contract, whatever the needle length."""
+    if not s1 or len(s1) > len(s2):
+        return
+    got, want = _window_sims_vs_oracle(s1, s2)
     assert got.tolist() == want
     if s1 in s2:
         assert got.max() == 1.0
+
+
+def test_window_sims_long_needle_fallback():
+    """An 80-char needle (two state words) runs on the same pooled pass and
+    finds its exact hit."""
+    s1 = "ab" * 40
+    got, want = _window_sims_vs_oracle(s1, "xx" + s1 + "yy")
+    assert got.tolist() == want
+    assert got.max() == 1.0
 
 
 # --- long needles: 1, 2 and 3 words of the bit-parallel state -------------
