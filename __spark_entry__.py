@@ -63,20 +63,22 @@ def _q_align_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tests/test_queries_oracle.py::test_gate_window_integrity pins that the
 # first-50 window contains all of groups (1)+(2).
 _GATE_PRIORITY = [
-    # (1) keys whose code changed this round: every subseg call scores its
-    # partial-ratio windows in one pooled multi-word bit-parallel LCS pass
-    # (kernel/lev.py; no needle length falls back to a dense Indel DP), and
-    # match() normalizes each string once — every query built on
-    # align_pages, align_segments, align_cogrouped, the salted path or
-    # match() —
+    # (1) keys whose code changed in the last rounds.  The alignment keys:
+    # every query built on align_pages, align_segments, align_cogrouped,
+    # the salted path or match() (one flat multi-word Myers pass,
+    # kernel/myers.py; one pooled bit-parallel LCS pass for the
+    # partial-ratio windows, kernel/lev.py; match() normalizes each string
+    # once) —
     "u1_align_pages", "u1_align_segments", "u1_align_salted",
     "u1_align_identity", "u1_align_noisy", "s7_mets_workspace",
     "k2_pagexml_merge", "k3_page_metrics", "k3_corpus_metrics",
     "a4_assemble_pages", "a5_unmatched_lines",
-    # and in the rounds before: the same keys (one flat multi-word Myers
-    # pass, kernel/myers.py) and training_split (its kept-id manifest is a
-    # local checkpoint instead of a temp-directory parquet table)
-    "training_split",
+    # and the dedup keys: the builders reuse a frame only through
+    # operators/dedup.materialize (a local checkpoint), so the shingle
+    # groups are no longer cached and the components edge list and the
+    # training split's kept-id manifest are checkpoints —
+    "training_split", "dedup_ngram_jaccard", "dedup_minhash_lsh",
+    "dedup_components", "curation_compaction", "curation_verdict",
     # (2) the 33 keys the r5 driver window did not sample
     "dedup_span_removal", "dedup_lines", "st_boilerplate_gate", "sim_lsh_topk",
     "sim_ivf_topk", "sim_ivf_lloyd_topk", "sim_cosine_dups",

@@ -21,6 +21,7 @@ bucketed band keys; no driver-side state anywhere.
 
 from __future__ import annotations
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -126,32 +127,22 @@ SELECT doc_id AS dup_id, keep_id FROM keep WHERE doc_id != keep_id
 """
 
 
+# --- frame reuse -------------------------------------------------------------
+
+def materialize(df):
+    """The one way the dedup builders and the curation job reuse a frame:
+    ``df`` computed once, into a local checkpoint that every later reader
+    scans instead of re-running its plan (and whatever committed tables
+    that plan reads).  Unlike ``.cache()`` it needs no release and no
+    registry: the checkpoint is freed once the returned frame is
+    garbage-collected, and it leaves no directory.  The trade: a local
+    checkpoint lives in executor storage only, so a lost executor fails
+    the job instead of recomputing the lost blocks (the components loop
+    and the METS parse in plans/workspace.py accept the same)."""
+    return df.localCheckpoint(eager=True)
+
+
 # --- shingles (shared by jaccard / minhash) ---------------------------------
-
-# Internal caches created by the query builders (shingle groups, edge
-# lists).  They are correctness-neutral reuse hints, but a long-lived
-# session invoking the builders repeatedly would accumulate executor
-# storage (ADVICE r4) — so every internal cache() is tracked here and
-# callers that own a session release them with unpersist_caches() once
-# the returned plan is materialized (CurationPipeline.run does; bench.py
-# uses a fresh JVM per trial).
-_LIVE_CACHES: list = []
-
-
-def _track_cache(df):
-    _LIVE_CACHES.append(df.cache())
-    return df
-
-
-def unpersist_caches() -> int:
-    """Release every internal cache created since the last call; returns
-    how many were released."""
-    n = 0
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist()
-        n += 1
-    return n
-
 
 def _shingles(aug):
     # sliding_ngrams keeps split(text) at O(K) evaluations per row — the
@@ -287,8 +278,7 @@ def ngram_jaccard_pairs(spark, sf_dir):
     cap) -> pair-count agg -> Jaccard from per-doc shingle counts.
     """
     aug = augmented_docs(spark, sf_dir)
-    return _jaccard_from_groups(
-        _track_cache(_shingle_groups(aug, hash_key=True)))
+    return _jaccard_from_groups(_shingle_groups(aug, hash_key=True))
 
 
 def _jaccard_from_groups(groups, restrict_to=None):
@@ -357,12 +347,12 @@ def minhash_lsh_pairs(spark, sf_dir):
     mix arithmetic is bit-identical in DuckDB (hex-cast + bigint ops,
     products < 2^61), so the oracle remains an exact twin.
 
-    The capped group table is computed ONCE and cached — it feeds both the
-    signature stage and the exact-Jaccard verification of the candidates.
+    The capped group table feeds both the signature stage and the
+    exact-Jaccard verification of the candidates inside one plan, so both
+    branches read the one exchange of its window (``ReusedExchange``).
     """
     aug = augmented_docs(spark, sf_dir)
-    groups = _track_cache(
-        _shingle_groups(aug, hash_key=True, carry_minhash=True))
+    groups = _shingle_groups(aug, hash_key=True, carry_minhash=True)
     sh = groups.select(F.explode("ids").alias("doc_id"),
                        F.expr(f"mh div {MIX_SPLIT}").alias("h1"),
                        (F.col("mh") % MIX_SPLIT).alias("h2"))
@@ -534,15 +524,15 @@ def _min_label_components(labels, edges_sym, max_iters: int = CC_MAX_ITERS):
     convergence needs O(log diameter) rounds instead of O(diameter) —
     long near-dup chains (template drift A~B~C~...) stop being a cap risk.
 
-    Cost per iteration: 2 joins + 1 aggregation + one ``localCheckpoint``
-    (lineage truncation); the convergence indicator is a tiny max() over
-    the already-checkpointed frame — no separate join-and-count pass.
+    Cost per iteration: 2 joins + 1 aggregation + one :func:`materialize`
+    (lineage truncation); the convergence indicator is a max() observed
+    on that checkpoint's own job — no separate pass.
 
     ``labels``: (id, label) start state; ``edges_sym``: symmetric (id1,
     id2) edge list.  Returns the converged (id, label) frame; raises
     loudly on non-convergence (silent truncation would under-deduplicate).
     """
-    labels = labels.localCheckpoint()
+    labels = materialize(labels)
     for _ in range(max_iters):
         neigh = (edges_sym
                  .join(labels, edges_sym.id1 == labels.id, "inner")
@@ -558,11 +548,11 @@ def _min_label_components(labels, edges_sym, max_iters: int = CC_MAX_ITERS):
                    .select("id", "old",
                            F.least("mid", F.coalesce("llabel", "mid"))
                            .alias("label")))
-        new_labels = doubled.localCheckpoint()
-        changed = new_labels.agg(
-            F.max((F.col("label") != F.col("old")).cast("int"))).first()[0]
-        labels = new_labels.select("id", "label")
-        if not changed:
+        changed = Observation()
+        labels = materialize(doubled.observe(changed, F.max(
+            (F.col("label") != F.col("old")).cast("int")).alias("c"))) \
+            .select("id", "label")
+        if not changed.get["c"]:
             return labels
     raise RuntimeError(
         f"components did not converge in {max_iters} iters "
@@ -589,8 +579,8 @@ def duplicate_components(spark, sf_dir, max_iters: int = CC_MAX_ITERS):
 def duplicate_components_df(aug, max_iters: int = CC_MAX_ITERS):
     """df-parameterized core of :func:`duplicate_components` — same plan
     over any (doc_id, text) DataFrame (used by plans/curation.py)."""
-    groups = _track_cache(_shingle_groups(aug, hash_key=True))
-    near = _jaccard_from_groups(groups).select("id1", "id2")
+    near = _jaccard_from_groups(_shingle_groups(aug, hash_key=True)) \
+        .select("id1", "id2")
     h = aug.select("doc_id", F.md5("text").alias("h"))
     w = Window.partitionBy("h")
     exact = (h.withColumn("keep_id", F.min("doc_id").over(w))
@@ -598,10 +588,10 @@ def duplicate_components_df(aug, max_iters: int = CC_MAX_ITERS):
              .select(F.col("keep_id").alias("id1"),
                      F.col("doc_id").alias("id2")))
     edges = near.unionByName(exact)
-    edges_sym = edges.unionByName(
-        edges.select(F.col("id2").alias("id1"), F.col("id1").alias("id2"))) \
-        .distinct()
-    edges_sym = _track_cache(edges_sym)
+    # every label round re-joins the edge list: computed once
+    edges_sym = materialize(edges.unionByName(
+        edges.select(F.col("id2").alias("id1"), F.col("id1").alias("id2")))
+        .distinct())
     labels = aug.select(F.col("doc_id").alias("id"),
                         F.col("doc_id").alias("label"))
     labels = _min_label_components(labels, edges_sym, max_iters=max_iters)
@@ -1227,13 +1217,6 @@ ORACLE_VERDICT = _oracle_verdict()
 
 # --- training split: verdict -> domain cap -> temperature (the endpoint) ----
 
-def materialize_ids(df):
-    """Compute a (small) id manifest once for all its readers: unlike
-    ``.cache()``, a local checkpoint is freed once the returned frame is
-    garbage-collected, and unlike a parquet copy it leaves no directory."""
-    return df.localCheckpoint(eager=True)
-
-
 def training_split(spark, sf_dir):
     """The full curation pipeline composed into the table a user actually
     trains on: ``curation_verdict`` keeps quality, non-duplicate,
@@ -1256,7 +1239,7 @@ def training_split(spark, sf_dir):
     # counts, language counts + global min, final join); without a
     # materialization each branch re-executes the whole verdict stack
     # (~3x the verdict cost, measured at sf0.1).
-    kept = materialize_ids(
+    kept = materialize(
         curation_verdict(spark, sf_dir).where("keep").select("doc_id"))
     docs = t(spark, sf_dir, "documents").select("doc_id", "lang")
     base = docs.join(kept, "doc_id")

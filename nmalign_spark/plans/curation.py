@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (benchmark_gram_hashes,
                                compaction_demotions_df, curation_verdict_df,
-                               unpersist_caches)
+                               materialize)
 from .tables import CommittedTables
 
 __all__ = ["CurationPipeline"]
@@ -53,33 +53,36 @@ class CurationPipeline(CommittedTables):
         """
         run_id = self._run_id(spark, run_id, "cur", "corpus")
         t0 = time.time()
-        # the resumed doc_ids are observed above the resume join, so the
-        # n_todo count also gives n_in: no count pass of the input batch
-        resumed = Observation()
-        docs = self._resume(spark, docs_df, "corpus", "doc_id", resumed)
-        n_todo = docs.count()
-        n_resumed = resumed.get["n"]
-        n_in = n_todo + n_resumed
         # incremental exact dedup vs the committed hash index: a document
-        # whose text already lives in the corpus is dropped pre-verdict
-        # (one keyed left-anti join on md5 — hash-pruned, AQE-planned)
+        # whose text already lives in the corpus is flagged (`_dup`) by one
+        # keyed left join on md5, and dropped before the verdict.  The
+        # resume join comes after it, so that the resumed count is observed
+        # above the last join: AQE drops an observed node under a join it
+        # finds empty at run time (an empty batch, PLANS.md §6)
         hashes = self._read(spark, "_hashes")
-        n_committed_dup = 0
-        if hashes is not None:
-            docs = (docs.withColumn("_h", F.md5("text"))
-                    .join(hashes.select(F.col("h").alias("_h")).distinct(),
-                          "_h", "left_anti")
+        if hashes is None:
+            docs = docs_df.withColumn("_dup", F.lit(None).cast("boolean"))
+        else:
+            docs = (docs_df.withColumn("_h", F.md5("text"))
+                    .join(hashes.select(F.col("h").alias("_h")).distinct()
+                          .withColumn("_dup", F.lit(True)), "_h", "left")
                     .drop("_h"))
-            n_committed_dup = n_todo - docs.count()
+        # the judged batch: every branch below reads this checkpoint, never
+        # the committed tables again
+        resumed = Observation()
+        batch = materialize(
+            self._resume(spark, docs, "corpus", "doc_id", resumed))
+        n_todo, n_committed_dup = batch.agg(
+            F.count(F.lit(1)), F.count("_dup")).first()
+        n_resumed = resumed.get["n"]
+        docs = batch.where(F.col("_dup").isNull()).drop("_dup")
 
         bench_hashes = (benchmark_gram_hashes(self.bench_df)
                         if self.bench_df is not None else None)
-        verdict = curation_verdict_df(
-            docs.select("doc_id", "text"),
-            bench_hashes=bench_hashes).cache()
-        # per-rule tallies BEFORE the corpus append: the verdict's plan
-        # reads the corpus (resume anti-join), and the append invalidates
-        # its cache, so an aggregate taken after it would re-judge the batch
+        verdict = materialize(curation_verdict_df(
+            docs.select("doc_id", "text"), bench_hashes=bench_hashes))
+        # per-rule tallies of the judged batch: the verdict is a checkpoint,
+        # so the corpus append below cannot make it re-judge the batch
         # against the grown corpus
         tallies = verdict.agg(
             F.count(F.lit(1)).alias("n_judged"),
@@ -89,7 +92,6 @@ class CurationPipeline(CommittedTables):
             F.sum(F.col("high_span_dup").cast("long")).alias("n_high_span"),
             F.sum(F.col("is_contaminated").cast("long"))
             .alias("n_contaminated"))
-        rules = spark.createDataFrame([tallies.first()], tallies.schema)
         # n_kept is observed at the root of the written frame: under the
         # join, AQE would prune it with the join of a batch that keeps nothing
         kept_obs = Observation()
@@ -103,10 +105,8 @@ class CurationPipeline(CommittedTables):
         self._write(self._tag(this_run.groupBy("lang", "bucket")
                               .agg(F.count(F.lit(1)).alias("n_kept")), run_id),
                     "_lineage")
-        self._write(self._tag(rules, run_id), "_rules")  # the marker: committed
-        verdict.unpersist()
-        unpersist_caches()  # internal shingle-group/edge caches (dedup.py)
-        return {"run_id": run_id, "n_in": n_in, "n_resumed": n_resumed,
+        self._write(self._tag(tallies, run_id), "_rules")  # the marker: committed
+        return {"run_id": run_id, "n_in": n_todo + n_resumed, "n_resumed": n_resumed,
                 "n_committed_dup": n_committed_dup, "n_kept": kept_obs.get["n"],
                 "secs": round(time.time() - t0, 2)}
 
@@ -128,7 +128,6 @@ class CurationPipeline(CommittedTables):
         n_after = self._replace(spark, "corpus",
                                 corpus.join(demote, "doc_id", "left_anti"),
                                 ("lang", "bucket"))
-        unpersist_caches()
         stats = {"n_before": n_before, "n_dropped": n_before - n_after}
         self._write(spark.createDataFrame([stats], "n_before long, n_dropped long")
                     .withColumn("compacted_at", F.current_timestamp()), "_compactions")

@@ -9,6 +9,11 @@ import pytest
 from nmalign_spark.plans.curation import CurationPipeline
 from nmalign_spark.plans.tables import read_committed
 
+# Spark jobs of one later run() and one compact() on the fixture of
+# test_job_budget_of_a_later_run_and_a_compaction (compact() ran 35 or 36
+# across repeated runs, local[4], AQE on)
+RUN_JOBS, COMPACT_JOBS = 45, 36
+
 
 def _docs(spark, sf_small):
     return (spark.read.parquet(f"{sf_small}/documents.parquet")
@@ -151,10 +156,11 @@ def test_rules_tally_the_judged_batch_on_a_later_run(spark, sf_small,
 
 def test_later_run_counts_the_batch_twice(spark, sf_small, tmp_path,
                                           monkeypatch):
-    """A run into an output with committed ``_hashes`` makes two count
-    passes, after the resume join and after the hash drop: the resumed
-    doc_ids are observed on the first of them, and ``n_in`` is their sum.
-    An empty later batch reads zeros, also with a shuffled resume join."""
+    """A run into an output with committed ``_hashes`` makes no count pass:
+    the resumed doc_ids are observed above the resume join, the todo and
+    committed-duplicate counts come from one aggregate over the judged
+    batch's checkpoint, and ``n_in`` is their sum.  An empty later batch
+    reads zeros, also with a shuffled resume join."""
     out = str(tmp_path / "cur")
     docs = _docs(spark, sf_small)
     first = CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 0))
@@ -167,7 +173,7 @@ def test_later_run_counts_the_batch_twice(spark, sf_small, tmp_path,
 
     monkeypatch.setattr(cls, "count", counting)
     stats = CurationPipeline(out).run(spark, docs)
-    assert len(calls) == 2
+    assert len(calls) == 0
     monkeypatch.setattr(cls, "count", count)
     assert stats["n_in"] == docs.count()
     assert stats["n_resumed"] == first["n_kept"]
@@ -178,6 +184,52 @@ def test_later_run_counts_the_batch_twice(spark, sf_small, tmp_path,
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert (empty["n_in"], empty["n_resumed"], empty["n_kept"]) == (0, 0, 0)
+
+
+def _jobs(spark, group, fn):
+    """The Spark jobs ``fn()`` runs, read from the status tracker under a
+    job group of their own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_job_budget_of_a_later_run_and_a_compaction(spark, sf_small, tmp_path):
+    """ROADMAP D7's budget: a later run() (hash drop, resume, verdict and
+    four writes) and a compact() on this fixture run no more Spark jobs
+    than they do when the judged batch, the verdict and the edge list are
+    each computed once, into a checkpoint."""
+    out = str(tmp_path / "cur")
+    docs = _docs(spark, sf_small)
+    CurationPipeline(out).run(spark, docs.where(F.col("doc_id") % 2 == 0))
+    tag = tmp_path.name
+    assert _jobs(spark, f"{tag}-run",
+                 lambda: CurationPipeline(out).run(spark, docs)) <= RUN_JOBS
+    assert _jobs(spark, f"{tag}-compact",
+                 lambda: CurationPipeline(out).compact(spark)) <= COMPACT_JOBS
+
+
+def test_no_cache_outlives_the_builders_or_a_run(spark, sf_small, tmp_path):
+    """The dedup builders and the curation job reuse frames through local
+    checkpoints only, so neither leaves an entry in the session's cache
+    manager for anyone to release."""
+    from nmalign_spark.operators import dedup
+
+    spark.catalog.clearCache()
+    caches = spark._jsparkSession.sharedState().cacheManager()
+    for build in (dedup.ngram_jaccard_pairs, dedup.minhash_lsh_pairs,
+                  dedup.duplicate_components):
+        build(spark, sf_small).collect()
+    assert caches.isEmpty()
+    out = str(tmp_path / "cur")
+    CurationPipeline(out).run(spark, _docs(spark, sf_small))
+    CurationPipeline(out).compact(spark)
+    assert caches.isEmpty()
 
 
 class Killed(Exception):

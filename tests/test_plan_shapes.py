@@ -42,6 +42,19 @@ def test_shingle_groups_caps_state_before_collect(spark, sf_small):
         f"{n_exchanges}")
 
 
+def test_shingle_groups_exchange_is_reused_across_branches(spark, sf_small):
+    """The capped groups feed several branches of one plan (the pair stream
+    and the per-doc counts; MinHash also its signatures) and are neither
+    cached nor checkpointed: the executed plan shuffles the shingles for
+    the window once, and the other branches reuse that exchange."""
+    for build in (dedup.ngram_jaccard_pairs, dedup.minhash_lsh_pairs):
+        df = build(spark, sf_small)
+        df.collect()
+        reused = [ln for ln in _plan(df).splitlines()
+                  if "ReusedExchange" in ln and "hashpartitioning(shingle" in ln]
+        assert reused, build.__name__
+
+
 def test_minhash_has_no_cartesian_product(spark, sf_small):
     plan = _plan(dedup.minhash_lsh_pairs(spark, sf_small))
     assert "CartesianProduct" not in plan
@@ -55,7 +68,7 @@ def test_grouping_shingle_paths_build_no_window_strings(spark, sf_small):
     anywhere in the plan, which were the allocation pressure
     BENCH_CURATION_ANALYSIS.md localized in the shingle stages."""
     # (duplicate_components shares jaccard's groups but its executed plan
-    # is cut at the pointer-doubling localCheckpoint, so the scan-side
+    # is cut at its edge-list and label checkpoints, so the scan-side
     # invariant is pinned on the two scan-visible consumers)
     for q in (dedup.ngram_jaccard_pairs, dedup.span_dup_fraction):
         plan = _plan(q(spark, sf_small))

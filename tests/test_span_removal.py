@@ -162,11 +162,11 @@ def test_materialize_ids_leaves_no_temp_directory(spark):
     import os
     import tempfile
 
-    from nmalign_spark.operators.dedup import materialize_ids
+    from nmalign_spark.operators.dedup import materialize
 
     pattern = os.path.join(tempfile.gettempdir(), "nmalign-*")
     before = set(glob.glob(pattern))
-    got = [materialize_ids(spark.range(50).withColumnRenamed("id", "doc_id"))
+    got = [materialize(spark.range(50).withColumnRenamed("id", "doc_id"))
            for _ in range(2)]
     assert set(glob.glob(pattern)) == before
     assert [sorted(r.doc_id for r in g.collect()) for g in got] == [list(range(50))] * 2
