@@ -106,8 +106,9 @@ class CurationPipeline(CommittedTables):
                               .agg(F.count(F.lit(1)).alias("n_kept")), run_id),
                     "_lineage")
         self._write(self._tag(tallies, run_id), "_rules")  # the marker: committed
-        return {"run_id": run_id, "n_in": n_todo + n_resumed, "n_resumed": n_resumed,
-                "n_committed_dup": n_committed_dup, "n_kept": kept_obs.get["n"],
+        return {"run_id": run_id, "n_in": n_todo + n_resumed,
+                "n_resumed": n_resumed, "n_committed_dup": n_committed_dup,
+                "n_kept": kept_obs.get["n"],
                 "secs": round(time.time() - t0, 2)}
 
     def compact(self, spark) -> dict:

@@ -10,9 +10,13 @@ from nmalign_spark.plans.curation import CurationPipeline
 from nmalign_spark.plans.tables import read_committed
 
 # Spark jobs of one later run() and one compact() on the fixture of
-# test_job_budget_of_a_later_run_and_a_compaction (compact() ran 35 or 36
-# across repeated runs, local[4], AQE on)
-RUN_JOBS, COMPACT_JOBS = 45, 36
+# test_job_budget_of_a_later_run_and_a_compaction, the most seen over
+# repeated runs (local[4], AQE on): run() takes 45 or 46, compact() 35
+# or 36.  The spread is AQE's build side for the near-dup pair join,
+# picked by which shuffle finishes first: building from the pair counts
+# is one broadcast job more than building from the per-doc shingle
+# counts, which the next join broadcasts anyway.
+RUN_JOBS, COMPACT_JOBS = 46, 36
 
 
 def _docs(spark, sf_small):
