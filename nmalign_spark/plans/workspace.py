@@ -1,7 +1,7 @@
 """The ``ocrd-nmalign-merge`` production flow over METS workspaces, end to
-end on Spark: METS scan -> zip_input_files pairing -> distributed file
-reads -> one per-page kernel (PAGE-XML / plaintext extraction, alignment,
-PAGE-XML merge-back) -> workspace export with an updated METS.
+end on Spark: METS scan -> zip_input_files pairing -> one per-page kernel
+(file reads, PAGE-XML / plaintext extraction, alignment, PAGE-XML
+merge-back) -> workspace export with an updated METS.
 
 Reference surface: /root/reference/nmalign/ocrd/cli.py (the processor's
 ``process_workspace``/``process_page_file``).  A user of the reference
@@ -16,22 +16,32 @@ PHYS_0001 everywhere) never collide.
 
 Scale shape: ONE Python pass per page.  The METS parse (a narrow
 ``mapInPandas``) runs once per call, into a ``localCheckpoint`` that the
-duplicate check, the pairing and the page plan all read.  The files each
-paired page reads (its PAGE file and its partners, hrefs as METS lists
-them) are joined to the ``binaryFile`` blobs once in the JVM, repartitioned
-by url into one partition per core (``align._kernel_partitions``) and
-collected per url without a second exchange; one ``mapInPandas`` then
-parses, aligns (``align_lists_rows``) and merges each page.  Every Arrow
-Python task costs a fixed executor-time toll above this flow's kernel work
-(PLANS.md §5e′), so no step of it is a Python stage of its own.  The
-pairing shuffles sit on near-uniform keys and are left to AQE.  The
-per-workspace METS rewrite at export is a tiny serial commit per workspace
-(the METS is one shared XML document — same split as the reference's METS
-server).
+duplicate check, the pairing and the page plan all read.  The page plan is
+built from that checkpoint alone: the file rows each page's sides list
+(its PAGE file and its partners, hrefs as METS lists them) are
+repartitioned by url into one partition per core
+(``align._kernel_partitions``) and collected per url without a second
+exchange; the groups holding both sides are exactly the pairs.  One
+``mapInPandas`` then reads each page's files, parses, aligns
+(``align_lists_rows``) and merges, so a page reads only the files it pairs
+(the reference's ``open()``, ocrd/cli.py:209-215) and no other file of a
+workspace is listed, read or shuffled.  Every Arrow Python task costs a
+fixed executor-time toll above this flow's kernel work (PLANS.md §5e′), so
+no step of it is a Python stage of its own.  The per-workspace METS
+rewrite at export is a tiny serial commit per workspace (the METS is one
+shared XML document — same split as the reference's METS server).
+
+The flow assumes a workspace path names the same directory on the driver
+and on every executor (a local run, or a shared file system mounted at
+one path): the kernel opens ``<workspace>/<href>`` on executors, the
+export writes pages there, and the driver rewrites ``mets.xml``.  An href
+is read relative to its workspace only; one that leaves it (``..`` or an
+absolute path) is never opened: the call fails, naming it.
 """
 
 from __future__ import annotations
 
+import os
 import xml.etree.ElementTree as ET
 from pathlib import Path
 
@@ -50,72 +60,47 @@ __all__ = ["align_workspace", "align_workspaces", "export_workspace",
 _SEP = "#"
 
 
-def _single_frames(spark, workspace_dir: str):
-    """(ws_df, blobs_df) for ONE workspace directory: workspace key =
-    resolved dir; hrefs are fileGrp-relative one level deep (the standard
-    ``<grp>/<file>`` layout)."""
-    resolved = str(Path(workspace_dir).resolve())
-    ws = (mets_workspaces_df(spark, str(Path(workspace_dir) / "mets.xml"))
-          .withColumn("workspace", F.lit(resolved)))
-    prefix = "file:" + resolved + "/"
-    # literal-replace via lit() so odd characters in the directory path
-    # can't break an expression string
-    blobs = (spark.read.format("binaryFile").load(resolved + "/*/*")
-             .select(F.lit(resolved).alias("workspace"),
-                     F.replace(F.col("path"), F.lit(prefix), F.lit(""))
-                     .alias("href"),
-                     F.col("content")))
-    return ws, blobs
-
-
-def _corpus_frames(spark, root: str):
-    """(ws_df, blobs_df) for a CORPUS layout ``<root>/<ws>/mets.xml`` +
-    ``<root>/<ws>/<grp>/<file>``: workspace key = ``file:``-less dir path
-    derived from each file's own path (no driver-side listing)."""
-    resolved = str(Path(root).resolve())
-    ws = (mets_workspaces_df(spark, resolved + "/*/mets.xml")
-          .withColumn("workspace",
-                      F.replace(F.replace(F.col("workspace"),
-                                          F.lit("/mets.xml"), F.lit("")),
-                                F.lit("file:"), F.lit(""))))
-    href = F.substring_index(F.col("path"), "/", -2)
-    wsdir = F.expr("substring(path, 6, length(path) - length("
-                   "substring_index(path, '/', -2)) - 6)")
-    blobs = (spark.read.format("binaryFile").load(resolved + "/*/*/*")
-             .select(wsdir.alias("workspace"), href.alias("href"),
-                     F.col("content")))
-    return ws, blobs
+def _read_file(ws: str, f, url: str) -> bytes:
+    """The bytes of one file a page pairs, at ``<ws>/<href>``.  A file
+    listed in METS but missing on disk fails like the reference's open()
+    (ocrd/cli.py:211-212), never drops the page or shifts the partner line
+    numbering; an href that leaves its workspace is never opened."""
+    href = f["href"]
+    rel = os.path.normpath(href)
+    if os.path.isabs(rel) or rel.split(os.sep)[0] == os.pardir:
+        raise ValueError(f"file in METS outside its workspace: {ws}: "
+                         f"{href!r} (page {url})")
+    try:
+        with open(os.path.join(ws, rel), "rb") as fh:
+            return fh.read()
+    except (FileNotFoundError, IsADirectoryError, NotADirectoryError):
+        raise FileNotFoundError(
+            f"{'partner ' if f['role'] else ''}file in METS missing "
+            f"on disk: {ws}/{href} (page {url})") from None
 
 
 def _merge_kernel(other_grp, normalization, cutoff, try_subseg):
-    """Per page (url, workspace, files): parse its PAGE file (role 0), read
-    its partner files (role 1) in sorted-href order (ocrd/cli.py:209-215:
-    the concatenated lines of the sorted plaintext files; a PAGE partner is
-    the page's only partner, and its lines keep their real ids), drop the
-    empty partner lines, align, merge back -> (url, xml, page_file)."""
+    """Per page (url, workspace, files): read and parse its PAGE file
+    (role 0), read its partner files (role 1) in sorted-href order
+    (ocrd/cli.py:209-215: the concatenated lines of the sorted plaintext
+    files; a PAGE partner is the page's only partner, and its lines keep
+    their real ids), drop the empty partner lines, align, merge back ->
+    (url, xml, page_file)."""
     import pandas as pd
 
     def merge(url, ws, files):
         files = sorted(files, key=lambda f: (f["role"], f["href"]))
-        for f in files:
-            # a file listed in METS but missing on disk fails like the
-            # reference's open() (ocrd/cli.py:211-212), never drops the
-            # page or shifts the partner line numbering
-            if f["content"] is None:
-                raise FileNotFoundError(
-                    f"{'partner ' if f['role'] else ''}file in METS missing "
-                    f"on disk: {ws}/{f['href']} (page {url})")
+        blobs = [_read_file(ws, f, url) for f in files]
         lines, ids = [], {}
-        for f in files[1:]:
+        for f, blob in zip(files[1:], blobs[1:]):
             if f["mimetype"] == MIMETYPE_PAGE:
-                for lid, text, _conf in parse_page_lines(f["content"]):
+                for lid, text, _conf in parse_page_lines(blob):
                     ids[len(lines)] = lid
                     lines.append(text)
             else:
-                lines += bytes(f["content"]).decode(
-                    "utf-8", "replace").splitlines()
+                lines += blob.decode("utf-8", "replace").splitlines()
         l2, nos = nonempty_lines(lines, range(len(lines)))
-        page = files[0]["content"]
+        page = blobs[0]
         rows = align_lists_rows(url, [t for _, t, _ in parse_page_lines(page)],
                                 l2, nos, normalization, cutoff, try_subseg)
         # a matched j's other line id: the partner's real id, else line%04d
@@ -134,34 +119,33 @@ def _merge_kernel(other_grp, normalization, cutoff, try_subseg):
     return kernel
 
 
-def _align(ws, blobs, input_grp: str, other_grp: str, normalization=None,
+def _align(ws, input_grp: str, other_grp: str, normalization=None,
            cutoff=None, try_subseg: bool = True):
-    """Core flow over (workspace, mets) + (workspace, href, content)."""
+    """Core flow over (workspace, mets) rows."""
     # the one METS parse of the call: the duplicate check, the pairing and
     # the page plan below all read this checkpoint
     files = mets_files_df(ws).localCheckpoint(eager=True)
     pairs = zip_workspace_files(files, input_grp, other_grp)
 
-    # one row per file a paired page reads, its PAGE file (role 0) and its
+    # one row per file a page's sides list, its PAGE file (role 0) and its
     # partner files (role 1), hrefs as METS lists them (an href may hold a
-    # comma, so never split the joined ``other_hrefs``), joined to the
-    # blobs once
+    # comma, so never split the joined ``other_hrefs``)
     def side(grp, role):
         return _side_files(files, grp, page_only=role == 0).select(
             "workspace", "page_id", F.lit(role).alias("role"), "href",
             "file_id", "mimetype")
     reads = (side(input_grp, 0).unionByName(side(other_grp, 1))
-             .join(pairs.select("workspace", "page_id"),
-                   ["workspace", "page_id"], "left_semi")
-             .join(blobs, ["workspace", "href"], "left")
              .withColumn("url", F.concat_ws(_SEP, "workspace", "page_id")))
     # the url repartition is the one exchange in front of the kernel: the
-    # groupBy's keys follow from url, so it keeps that layout
+    # groupBy's keys follow from url, so it keeps that layout; a group
+    # holding both roles is a pair (zip_workspace_files' inner join)
+    roles = F.col("files.role")
     per_page = (reads.repartition(_kernel_partitions(reads), "url")
                 .groupBy("url", "workspace")
                 .agg(F.collect_list(F.struct("role", "href", "file_id",
-                                             "mimetype", "content"))
-                     .alias("files")))
+                                             "mimetype")).alias("files"))
+                .where(F.array_contains(roles, 0)
+                       & F.array_contains(roles, 1)))
     merged = per_page.mapInPandas(
         _merge_kernel(other_grp, normalization, cutoff, try_subseg),
         schema="url string, xml binary, page_file string")
@@ -172,11 +156,13 @@ def align_workspace(spark, workspace_dir: str, input_grp: str,
                     other_grp: str, normalization=None, cutoff=None,
                     try_subseg: bool = True):
     """Run the full merge flow for one workspace directory (``mets.xml``
-    inside).  Returns (merged_df, pairs_df): merged
-    (url=<workspace>#<page_id>, xml) ready for :func:`export_workspaces`,
-    and the pairing table."""
-    ws, blobs = _single_frames(spark, workspace_dir)
-    return _align(ws, blobs, input_grp, other_grp, normalization, cutoff,
+    inside; workspace key = the resolved directory).  Returns (merged_df,
+    pairs_df): merged (url=<workspace>#<page_id>, xml) ready for
+    :func:`export_workspaces`, and the pairing table."""
+    resolved = str(Path(workspace_dir).resolve())
+    ws = (mets_workspaces_df(spark, str(Path(resolved) / "mets.xml"))
+          .withColumn("workspace", F.lit(resolved)))
+    return _align(ws, input_grp, other_grp, normalization, cutoff,
                   try_subseg)
 
 
@@ -185,9 +171,15 @@ def align_workspaces(spark, root: str, input_grp: str, other_grp: str,
                      try_subseg: bool = True):
     """Same flow over a CORPUS of workspaces laid out
     ``<root>/<ws>/mets.xml`` — one Spark job for all of them; page ids are
-    disambiguated by the workspace key."""
-    ws, blobs = _corpus_frames(spark, root)
-    return _align(ws, blobs, input_grp, other_grp, normalization, cutoff,
+    disambiguated by the workspace key, the ``file:``-less directory of
+    each ``mets.xml`` (no driver-side listing)."""
+    resolved = str(Path(root).resolve())
+    ws = (mets_workspaces_df(spark, resolved + "/*/mets.xml")
+          .withColumn("workspace",
+                      F.replace(F.replace(F.col("workspace"),
+                                          F.lit("/mets.xml"), F.lit("")),
+                                F.lit("file:"), F.lit(""))))
+    return _align(ws, input_grp, other_grp, normalization, cutoff,
                   try_subseg)
 
 

@@ -216,7 +216,8 @@ class TestEndToEnd:
         assert row.n_other == 3
 
         # materialize both sides from the paired hrefs (driver-side here —
-        # one tiny workspace; production reads hrefs via binaryFile scans)
+        # one tiny workspace; production opens them in the per-page kernel
+        # of plans/workspace.py)
         ocr_xml = (ws / "OCR" / "p1.xml").read_bytes()
         cand = pagexml_segments_df(
             spark.createDataFrame([("P1", ocr_xml)], "url string, xml binary"),

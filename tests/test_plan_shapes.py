@@ -216,8 +216,9 @@ def test_pipeline_kernel_exchanges_one_partition_per_core(spark, sf_small,
 
 def test_workspace_merge_is_one_python_pass_per_page(spark, tmp_path):
     """``align_workspaces``' merged frame runs ONE Python node, the per-page
-    parse/align/merge kernel: no grouped-map node, no second METS parse
-    (the plan reads the METS checkpoint), and its one pinned exchange, the
+    read/parse/align/merge kernel: no grouped-map node, no second METS parse
+    (the plan reads the METS checkpoint), no file scan or join (each page
+    reads its own files in the kernel), and its one pinned exchange, the
     url repartition, has one partition per core."""
     from nmalign_spark.plans.workspace import align_workspaces
     from nmalign_spark.sources.mets import MIMETYPE_PAGE, make_mets_xml
@@ -239,5 +240,7 @@ def test_workspace_merge_is_one_python_pass_per_page(spark, tmp_path):
     assert "FlatMapGroupsInPandas" not in plan
     assert "EvalPython" not in plan
     assert "ExistingRDD" in plan
+    assert "binaryFile" not in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
     n = spark.sparkContext.defaultParallelism
     assert set(_repartition_counts(plan)) == {n}

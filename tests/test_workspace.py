@@ -4,6 +4,8 @@ distributed reads -> alignment -> merge-back -> METS/fileGrp export
 PAGE-XML partner whose REAL line ids must appear in dataTypeDetails."""
 from __future__ import annotations
 
+import pytest
+
 from nmalign_spark.plans.workspace import (align_workspace,
                                            align_workspaces,
                                            export_workspace,
@@ -11,7 +13,7 @@ from nmalign_spark.plans.workspace import (align_workspace,
 from nmalign_spark.sinks.pagexml_merge import parse_line_equivs
 from nmalign_spark.sources.mets import (MIMETYPE_PAGE, make_mets_xml,
                                         mets_files_df, mets_workspaces_df,
-                                        zip_workspace_files)
+                                        parse_mets, zip_workspace_files)
 from nmalign_spark.sources.pagexml import make_page_xml, parse_page_lines
 
 TXT = "text/plain"
@@ -303,3 +305,133 @@ def test_fused_merge_equals_the_operator_composition(spark, tmp_path):
     assert [d for *_, d in equivs["P1"] if d] == [
         "GT/line0000[0:25]", "GT/line0000[26:51]", "GT/line0001"]
     assert equivs["P5"] == equivs["P6"] == []
+
+
+def _retarget(ws, pid, href):
+    """Point page ``pid``'s one plaintext partner at ``href`` in METS."""
+    mets = (ws / "mets.xml").read_text()
+    assert mets.count(f'"GT/{pid}.txt"') == 1
+    (ws / "mets.xml").write_text(mets.replace(f'"GT/{pid}.txt"', f'"{href}"'))
+
+
+@pytest.mark.parametrize("mode", ["single", "corpus"])
+def test_partner_in_a_subdirectory_merges(spark, tmp_path, mode):
+    """A relative href deeper than ``<grp>/<file>`` is read like any other
+    (the reference opens it by its path inside the workspace)."""
+    ws = build_workspace(tmp_path)
+    (ws / "GT" / "sub").mkdir()
+    (ws / "GT" / "PA.txt").rename(ws / "GT" / "sub" / "PA.txt")
+    _retarget(ws, "PA", "GT/sub/PA.txt")
+    if mode == "single":
+        merged, _ = align_workspace(spark, str(ws), "OCR", "GT",
+                                    normalization=NORM, try_subseg=False)
+    else:
+        merged, _ = align_workspaces(spark, str(tmp_path), "OCR", "GT",
+                                     normalization=NORM, try_subseg=False)
+    assert export_workspaces(merged, "OUT") == 3
+    out = (ws / "OUT" / "OUT_PA.xml").read_bytes()
+    assert [t for _, t, _ in parse_page_lines(out)] == GT
+
+
+@pytest.mark.parametrize("where", ["parent", "absolute"])
+def test_href_outside_the_workspace_is_refused(spark, tmp_path, where):
+    """An href that leaves its workspace directory is never opened, even
+    when the file it names exists: the call fails naming the href, and no
+    page of it is written."""
+    ws = build_workspace(tmp_path)
+    other = tmp_path / "other" / "GT"
+    other.mkdir(parents=True)
+    (other / "PA.txt").write_text("\n".join(GT) + "\n")
+    href = ("../other/GT/PA.txt" if where == "parent"
+            else str(other / "PA.txt"))
+    _retarget(ws, "PA", href)
+    merged, _ = align_workspace(spark, str(ws), "OCR", "GT",
+                                normalization=NORM, try_subseg=False)
+    with pytest.raises(Exception, match="outside its workspace") as err:
+        export_workspace(merged, str(ws), "OUT")
+    assert href in str(err.value)
+    assert not (ws / "OUT").exists()
+
+
+@pytest.mark.parametrize("href", ["", "GT", "GT/PB_a.txt/PA.txt"])
+def test_partner_href_naming_no_file_fails_loudly(spark, tmp_path, href):
+    """An empty href, or one naming a directory or a path through a file,
+    fails as missing on disk too, naming the page."""
+    ws = build_workspace(tmp_path)
+    _retarget(ws, "PA", href)
+    merged, _ = align_workspace(spark, str(ws), "OCR", "GT",
+                                normalization=NORM, try_subseg=False)
+    with pytest.raises(Exception, match="missing on disk: .*#PA"):
+        merged.collect()
+
+
+def test_a_file_group_the_merge_never_reads(spark, tmp_path):
+    """Files of a fileGrp the merge does not pair are never read: a page
+    image too large for any Spark row (a 3 GB sparse file, no disk blocks)
+    sits next to OCR and GT, listed in METS, and the flow runs."""
+    root = tmp_path / "corpus"
+    ws = build_workspace(root, "ws1")
+    (ws / "IMG").mkdir()
+    with open(ws / "IMG" / "PA.tif", "wb") as f:
+        f.truncate(3 << 30)
+    pages = {}
+    for grp, fid, mime, href, pid in parse_mets((ws / "mets.xml").read_bytes()):
+        pages.setdefault(pid, []).append((grp, fid, mime, href))
+    pages["PA"].insert(0, ("IMG", "I_PA", "image/tiff", "IMG/PA.tif"))
+    (ws / "mets.xml").write_text(make_mets_xml(list(pages.items())))
+    merged, pairs = align_workspaces(spark, str(root), "OCR", "GT",
+                                     normalization=NORM, try_subseg=False)
+    assert pairs.count() == 3
+    assert export_workspaces(merged, "OUT") == 3
+    for pid in ("PA", "PB", "PC"):
+        out = (ws / "OUT" / f"OUT_{pid}.xml").read_bytes()
+        assert [t for _, t, _ in parse_page_lines(out)] == GT
+
+
+@pytest.mark.parametrize("mode", ["single", "corpus"])
+def test_odd_workspace_names(spark, tmp_path, mode):
+    """Workspace directories named with a space, a percent escape, a
+    non-ASCII letter, a comma or the url separator export every page into
+    ``<ws>/OUT/``: the workspace key is the path the kernel opens and the
+    export writes to."""
+    names = ("ws a", "ws%20b", "wsé", "ws,c", "ws#d")
+    for name in names:
+        build_workspace(tmp_path, name)
+    if mode == "single":
+        for name in names:
+            merged, _ = align_workspace(spark, str(tmp_path / name), "OCR",
+                                        "GT", normalization=NORM,
+                                        try_subseg=False)
+            assert export_workspace(merged, str(tmp_path / name), "OUT") == 3
+    else:
+        merged, _ = align_workspaces(spark, str(tmp_path), "OCR", "GT",
+                                     normalization=NORM, try_subseg=False)
+        assert export_workspaces(merged, "OUT") == 3 * len(names)
+    for name in names:
+        for pid in ("PA", "PB", "PC"):
+            out = (tmp_path / name / "OUT" / f"OUT_{pid}.xml").read_bytes()
+            assert [t for _, t, _ in parse_page_lines(out)] == GT
+
+
+# the most jobs seen over repeated runs (20 of 20 read 10); a call that
+# listed and read every file of the corpus with ``binaryFile`` took 14
+MERGE_JOBS = 10
+
+
+def test_job_budget_of_a_corpus_merge(spark, tmp_path):
+    """One align_workspaces + export_workspaces over two workspaces runs
+    the METS read and its checkpoint, the duplicate check, the merge and
+    the export, and no job that lists or reads the files pages pair."""
+    root = tmp_path / "corpus"
+    build_workspace(root, "ws1")
+    build_workspace(root, "ws2")
+    sc, group = spark.sparkContext, f"{tmp_path.name}-merge"
+    sc.setJobGroup(group, group)
+    try:
+        merged, _ = align_workspaces(spark, str(root), "OCR", "GT",
+                                     normalization=NORM, try_subseg=False)
+        assert export_workspaces(merged, "OUT") == 6
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= MERGE_JOBS
